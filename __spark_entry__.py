@@ -4634,56 +4634,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # tests/test_entry.py::test_window_order_matches_tool pins dict order
     # to the tool's output so the comment cannot drift from reality.
     return {
-        "phash_dihedral": q_phash_dihedral,
-        "pyds_pushdown": q_pyds_pushdown,
-        "stream_cms": q_stream_cms,
-        "stream_hll": q_stream_hll,
-        "stream_kmv": q_stream_kmv,
-        "substring_dup": q_substring_dup,
-        "token_entropy": q_token_entropy,
-        "triangle_count": q_triangle_count,
-        "upsert_customers": q_upsert_customers,
-        "winsorize": q_winsorize,
-        "asof_purchase": q_asof_purchase,
-        "bpe_fertility": q_bpe_fertility,
-        "conditional_aggs": q_conditional_aggs,
-        "dedup_incremental": q_dedup_incremental,
-        "denorm_flat": q_denorm_flat,
-        "disjunctive_revenue": q_disjunctive_revenue,
-        "doc_chunks": q_doc_chunks,
-        "embed_ivf_learned": q_embed_ivf_learned,
-        "embed_ivf_topk": q_embed_ivf_topk,
-        "embed_lsh_topk": q_embed_lsh_topk,
-        "entity_resolution": q_entity_resolution,
-        "event_multi_pattern": q_event_multi_pattern,
-        "events_hourly": q_events_hourly,
-        "except_segments": q_except_segments,
-        "forecast_revenue": q_forecast_revenue,
-        "heavy_suppliers": q_heavy_suppliers,
-        "heavy_tokens": q_heavy_tokens,
-        "idle_customers": q_idle_customers,
-        "important_parts": q_important_parts,
+        "pagerank": q_pagerank,
+        "ppr_seeded": q_ppr_seeded,
+        "sssp_hops": q_sssp_hops,
+        "bfs_distances": q_bfs_distances,
         "kcore_parts": q_kcore_parts,
-        "lm_tail_trained": q_lm_tail_trained,
         "lpa_communities": q_lpa_communities,
-        "min_price_supplier": q_min_price_supplier,
-        "namespace_project": q_namespace_project,
-        "nest_chunked": q_nest_chunked,
-        "nest_orders": q_nest_orders,
-        "ngram_containment": q_ngram_containment,
-        "ngram_prefix_jaccard": q_ngram_prefix_jaccard,
-        "orc_roundtrip": q_orc_roundtrip,
-        "order_count_histogram": q_order_count_histogram,
-        "orders_above_customer_avg": q_orders_above_customer_avg,
-        "pack_sequences": q_pack_sequences,
-        "parts_never_ordered": q_parts_never_ordered,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q3_top_revenue": q3_top_revenue,
-        "q5_region_revenue": q5_region_revenue,
-        "quality_filter": q_quality_filter,
-        "quantity_percentiles": q_quantity_percentiles,
-        "range_join_bands": q_range_join_bands,
-        "returned_revenue_topn": q_returned_revenue_topn,
+        "lpa_modularity": q_lpa_modularity,
+        "hits_scores": q_hits_scores,
+        "dedup_clusters": q_dedup_clusters,
+        "dedup_keep_best": q_dedup_keep_best,
+        "bpe_train": q_bpe_train,
+        "bpe_segments": q_bpe_segments,
+        "bpe_fertility": q_bpe_fertility,
+        "wordpiece_train": q_wordpiece_train,
+        "wordpiece_segments": q_wordpiece_segments,
+        "wordpiece_fertility": q_wordpiece_fertility,
+        "unigram_train": q_unigram_train,
+        "unigram_segments": q_unigram_segments,
+        "unigram_fertility": q_unigram_fertility,
         "robust_outliers": q_robust_outliers,
         "rollup_revenue": q_rollup_revenue,
         "schema_projection": q_schema_projection,
@@ -4707,13 +4676,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interval_overlap": q_interval_overlap,
         "lang_id_trained": q_lang_id_trained,
         "lookup_decode": q_lookup_decode,
-        "lpa_modularity": q_lpa_modularity,
         "mixture_repeats": q_mixture_repeats,
         "multimodal_gif": q_multimodal_gif,
         "ngram_jaccard": q_ngram_jaccard,
         "partitioned_roundtrip": q_partitioned_roundtrip,
         "point_in_time": q_point_in_time,
-        "ppr_seeded": q_ppr_seeded,
         "priority_late_ship": q_priority_late_ship,
         "quantile_incremental": q_quantile_incremental,
         "quota_sample": q_quota_sample,
@@ -4736,14 +4703,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "supplier_cnt_by_attrs": q_supplier_cnt_by_attrs,
         "suppliers_with_sales": q_suppliers_with_sales,
         "top_supplier": q_top_supplier,
-        "unigram_train": q_unigram_train,
         "volume_shipping": q_volume_shipping,
         "waiting_suppliers": q_waiting_suppliers,
         "window_running_total": q_window_running_total,
         "ams_f2": q_ams_f2,
         "array_suite": q_array_suite,
         "basket_lift": q_basket_lift,
-        "bfs_distances": q_bfs_distances,
         "big_orders": q_big_orders,
         "bq_sink_emulated": q_bq_sink_emulated,
         "cms_join_size": q_cms_join_size,
@@ -4776,22 +4741,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tfidf_doc_pairs": q_tfidf_doc_pairs,
         "tfidf_topk": q_tfidf_topk,
         "token_embed_topk": q_token_embed_topk,
-        "unigram_fertility": q_unigram_fertility,
-        "unigram_segments": q_unigram_segments,
         "vocab_growth": q_vocab_growth,
         "weighted_sample": q_weighted_sample,
         "window_suite": q_window_suite,
         "winnow_neardup": q_winnow_neardup,
-        "wordpiece_fertility": q_wordpiece_fertility,
-        "wordpiece_segments": q_wordpiece_segments,
-        "wordpiece_train": q_wordpiece_train,
         "zipf_slope": q_zipf_slope,
         "zorder_key": q_zorder_key,
         "attribution": q_attribution,
         "audio_neardup": q_audio_neardup,
         "corpus_keep_trained": q_corpus_keep_trained,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_keep_best": q_dedup_keep_best,
         "doc_embed_topk": q_doc_embed_topk,
         "embed_sq_topk": q_embed_sq_topk,
         "embed_topk": q_embed_topk,
@@ -4828,7 +4786,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "retrieval_eval": q_retrieval_eval,
         "rollup_grouping_id": q_rollup_grouping_id,
         "ship_priority_counts": q_ship_priority_counts,
-        "sssp_hops": q_sssp_hops,
         "stream_phash": q_stream_phash,
         "string_suite": q_string_suite,
         "temperature_quotas": q_temperature_quotas,
@@ -4840,8 +4797,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bloom_prune": q_bloom_prune,
         "bm25_topk": q_bm25_topk,
         "boilerplate_strip": q_boilerplate_strip,
-        "bpe_segments": q_bpe_segments,
-        "bpe_train": q_bpe_train,
         "bucketed_join": q_bucketed_join,
         "cms_tokens": q_cms_tokens,
         "corpus_curate_multimodal": q_corpus_curate_multimodal,
@@ -4859,7 +4814,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "event_pattern": q_event_pattern,
         "frame_samples": q_frame_samples,
         "hard_negatives_ann": q_hard_negatives_ann,
-        "hits_scores": q_hits_scores,
         "hll_distinct": q_hll_distinct,
         "hll_intersect": q_hll_intersect,
         "hll_sliding": q_hll_sliding,
@@ -4876,7 +4830,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_resize": q_multimodal_resize,
         "ndjson_roundtrip": q_ndjson_roundtrip,
         "ngram_novelty": q_ngram_novelty,
-        "pagerank": q_pagerank,
         "pyds_ndjson": q_pyds_ndjson,
         "spatial_grid_join": q_spatial_grid_join,
         "spatial_knn": q_spatial_knn,
@@ -4885,6 +4838,53 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "video_dihedral": q_video_dihedral,
         "video_frame_lookup": q_video_frame_lookup,
         "video_neardup": q_video_neardup,
+        "asof_purchase": q_asof_purchase,
+        "conditional_aggs": q_conditional_aggs,
+        "dedup_incremental": q_dedup_incremental,
+        "denorm_flat": q_denorm_flat,
+        "disjunctive_revenue": q_disjunctive_revenue,
+        "doc_chunks": q_doc_chunks,
+        "embed_ivf_learned": q_embed_ivf_learned,
+        "embed_ivf_topk": q_embed_ivf_topk,
+        "embed_lsh_topk": q_embed_lsh_topk,
+        "entity_resolution": q_entity_resolution,
+        "event_multi_pattern": q_event_multi_pattern,
+        "events_hourly": q_events_hourly,
+        "except_segments": q_except_segments,
+        "forecast_revenue": q_forecast_revenue,
+        "heavy_suppliers": q_heavy_suppliers,
+        "heavy_tokens": q_heavy_tokens,
+        "idle_customers": q_idle_customers,
+        "important_parts": q_important_parts,
+        "lm_tail_trained": q_lm_tail_trained,
+        "min_price_supplier": q_min_price_supplier,
+        "namespace_project": q_namespace_project,
+        "nest_chunked": q_nest_chunked,
+        "nest_orders": q_nest_orders,
+        "ngram_containment": q_ngram_containment,
+        "ngram_prefix_jaccard": q_ngram_prefix_jaccard,
+        "orc_roundtrip": q_orc_roundtrip,
+        "order_count_histogram": q_order_count_histogram,
+        "orders_above_customer_avg": q_orders_above_customer_avg,
+        "pack_sequences": q_pack_sequences,
+        "parts_never_ordered": q_parts_never_ordered,
+        "phash_dihedral": q_phash_dihedral,
+        "pyds_pushdown": q_pyds_pushdown,
+        "q1_pricing_summary": q1_pricing_summary,
+        "q3_top_revenue": q3_top_revenue,
+        "q5_region_revenue": q5_region_revenue,
+        "quality_filter": q_quality_filter,
+        "quantity_percentiles": q_quantity_percentiles,
+        "range_join_bands": q_range_join_bands,
+        "returned_revenue_topn": q_returned_revenue_topn,
+        "stream_cms": q_stream_cms,
+        "stream_hll": q_stream_hll,
+        "stream_kmv": q_stream_kmv,
+        "substring_dup": q_substring_dup,
+        "token_entropy": q_token_entropy,
+        "triangle_count": q_triangle_count,
+        "upsert_customers": q_upsert_customers,
+        "winsorize": q_winsorize,
     }
 
 

@@ -8,10 +8,12 @@ plan later — so the operator itself can never safely ``unpersist()``.
 
 In a process-per-query harness (the driver, pytest) that is fine: executor
 storage dies with the session. In a long-lived 100 TB session it pins
-executor storage until the JVM GCs the DataFrame. ``pin()`` therefore
-tracks every operator-internal persist in a module registry and
+executor storage until the JVM GCs the DataFrame. ``pin()`` and ``ckpt()``
+therefore track every operator-internal persist and checkpoint, and
 ``release_pinned()`` frees them all — call it after materializing an
-operator's output (bench.py does, between timed queries).
+operator's output (bench.py does, between timed queries). Iterative
+operators run through ``fixpoint()``, which holds one round at a time, so
+what they leave behind does not grow with the round count.
 """
 
 from __future__ import annotations
@@ -37,6 +39,16 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
+def _ckpt_key(df: DataFrame) -> tuple:
+    """(SparkContext, rdd id) of a checkpointed frame (a bare LogicalRDD);
+    TypeError on any other plan, e.g. a projection of a checkpoint."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise TypeError("not a checkpointed frame: analyzed plan is "
+                        f"{plan.nodeName()}, expected LogicalRDD")
+    return df.sparkSession.sparkContext, int(plan.rdd().id())
+
+
 def ckpt(df: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` with tracked storage (r12).
 
@@ -55,11 +67,7 @@ def ckpt(df: DataFrame) -> DataFrame:
     tools all rebuild plans per run). Usage: ``df.transform(ckpt)``.
     """
     out = df.localCheckpoint()
-    try:
-        rdd_id = int(out._jdf.queryExecution().analyzed().rdd().id())
-        _CKPT.append((out.sparkSession.sparkContext, rdd_id))
-    except Exception:
-        pass  # unexpected plan shape: leave the blocks to ContextCleaner
+    _CKPT.append(_ckpt_key(out))
     return out
 
 
@@ -82,24 +90,47 @@ def hot_ckpt(df: DataFrame) -> DataFrame:
 
 
 def drop_ckpt(df: DataFrame) -> None:
-    """Free ONE checkpointed frame's blocks immediately (r13, guide §5).
+    """Free ONE tracked checkpoint's blocks now, not at release_pinned().
+    Raises on a frame that is not a tracked checkpoint. Irrecoverable —
+    only for frames never read again (``fixpoint()`` is the caller)."""
+    key = _ckpt_key(df)
+    if key not in _CKPT:
+        raise ValueError(f"rdd {key[1]} is not a tracked checkpoint "
+                         "(never ckpt()ed, or already freed)")
+    key[0]._jsc.sc().unpersistRDD(key[1], False)
+    _CKPT.remove(key)
 
-    Iterative operators checkpoint per round; without this, every
-    round's blocks stay in MEMORY_AND_DISK until release_pinned() —
-    at sf3 the k-core loop held ~6 rounds x 67M edge rows (~20 GB of
-    deserialized storage), pushing eviction/spill and a superlinear
-    slope. A round's state is dead the moment the NEXT round is
-    materialized, so loops drop the previous frame right after the new
-    checkpoint's action completes. Dropping truncated-lineage data is
-    irrecoverable — only call on frames that will never be read again.
+
+def fixpoint(init: DataFrame, step, max_iter: int, done=None) -> DataFrame:
+    """Run ``state = step(state)`` for up to ``max_iter`` rounds, holding
+    one round's storage at a time.
+
+    ``init`` must be a ``ckpt()`` frame; fixpoint owns it from then on.
+    ``step`` returns the next round's lazy plan, or None when there is no
+    next round. Each round is checkpointed, since the next round (and the
+    caller's output, often more than once) reads it; a caller whose output
+    reads the final round once applies ``step`` to the result itself,
+    keeping that round lazy. ``done(new, old)`` runs while both rounds are
+    held and stops the loop by returning True. The superseded round is
+    then freed; only the newest is left to ``release_pinned()``.
+
+    Freeing per round matters at scale: at sf3 the k-core loop held ~6
+    dead rounds x 67M edge rows (~20 GB deserialized) until
+    release_pinned(), enough to force eviction and spill.
     """
-    try:
-        rdd_id = int(df._jdf.queryExecution().analyzed().rdd().id())
-        sc = df.sparkSession.sparkContext
-        sc._jsc.sc().unpersistRDD(rdd_id, False)
-        _CKPT[:] = [(s, i) for (s, i) in _CKPT if i != rdd_id]
-    except Exception:
-        pass  # not a checkpointed frame / session gone — nothing to free
+    # ckpt/drop_ckpt resolve as module globals, so tracing wrappers see them
+    state = init
+    for _ in range(max_iter):
+        new = step(state)
+        if new is None:
+            break
+        new = ckpt(new)
+        stop = done is not None and done(new, state)
+        drop_ckpt(state)
+        state = new
+        if stop:
+            break
+    return state
 
 
 def release_pinned() -> int:

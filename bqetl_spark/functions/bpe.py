@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bqetl_spark.caching import ckpt, drop_ckpt
+from bqetl_spark.caching import ckpt, fixpoint
 from bqetl_spark.functions.text import tokens
 
 MERGE_SCHEMA = T.StructType([
@@ -105,7 +105,8 @@ def bpe_train(docs: DataFrame, n_merges: int = 8, text_col: str = "text",
              .select("word", "freq", _encode("word").alias("s"))
              .transform(ckpt))
     merges: list[tuple] = []
-    for k in range(1, n_merges + 1):
+
+    def merge_best_pair(vocab: DataFrame) -> DataFrame | None:
         sym = F.split(F.trim(F.col("s")), "  ")
         pairs = (vocab
                  .select("freq", sym.alias("sym"))
@@ -121,20 +122,17 @@ def bpe_train(docs: DataFrame, n_merges: int = 8, text_col: str = "text",
         best = (pairs.orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
                 .limit(1).collect())
         if not best:
-            break
+            return None
         l, r, cnt = best[0]["l"], best[0]["r"], int(best[0]["cnt"])
-        merges.append((k, l, r, l + r, cnt))
-        vocab = vocab.select(
+        merges.append((len(merges) + 1, l, r, l + r, cnt))
+        if len(merges) == n_merges:
+            return None  # table full: the next vocab is never read
+        return vocab.select(
             "word", "freq",
             F.replace(F.col("s"), F.lit(f" {l}  {r} "),
                       F.lit(f" {l}{r} ")).alias("s"))
-        if k < n_merges:
-            # cut lineage eagerly: O(1) PLAN size per round, not just
-            # O(1) re-execution (vocab-sized job, r12); the superseded
-            # round's checkpoint blocks are freed at once (r13, §5)
-            prev = vocab
-            vocab = vocab.transform(ckpt)
-            drop_ckpt(prev)
+
+    fixpoint(vocab, merge_best_pair, n_merges)
     return spark.createDataFrame(merges, MERGE_SCHEMA)
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bqetl_spark.functions.text import fingerprint, tokens
-from bqetl_spark.caching import ckpt, drop_ckpt, pin
+from bqetl_spark.caching import ckpt, fixpoint, pin
 from bqetl_spark.session import compute_parallelism
 
 
@@ -665,7 +665,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
     labels = (und.select(F.col("s").alias("node")).distinct()
               .withColumn("comp", F.col("node"))
               .transform(ckpt))
-    for _ in range(max_iter):
+
+    def propagate(labels: DataFrame) -> DataFrame:
         msgs = (und.join(labels, und["s"] == labels["node"])
                 .select(F.col("d").alias("node"), F.col("comp")))
         prop = (labels.union(msgs)
@@ -673,24 +674,26 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         # pointer jumping: follow the label one more hop (comp is itself a
         # node, so its label exists); min is monotone, so this only tightens
         jump = prop.select(F.col("node").alias("__n2"), F.col("comp").alias("__c2"))
-        new_labels = (prop.join(jump, prop["comp"] == jump["__n2"], "left")
-                      .select("node",
-                              F.least("comp", F.coalesce("__c2", "comp"))
-                              .alias("comp"))
-                      .transform(ckpt))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .filter(F.col("n.comp") != F.col("o.comp"))
-                   .limit(1).count())
-        # the changed-probe was the old labeling's last reader — free
-        # its checkpoint blocks now (r13, guide §5)
-        drop_ckpt(labels)
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
-        "raise max_iter (rounds needed ~ log2(component diameter))")
+        return (prop.join(jump, prop["comp"] == jump["__n2"], "left")
+                .select("node",
+                        F.least("comp", F.coalesce("__c2", "comp"))
+                        .alias("comp")))
+
+    changed = [True]
+
+    def settled(new: DataFrame, old: DataFrame) -> bool:
+        changed[0] = bool(new.alias("n")
+                          .join(old.alias("o"), "node")
+                          .filter(F.col("n.comp") != F.col("o.comp"))
+                          .limit(1).count())
+        return not changed[0]
+
+    labels = fixpoint(labels, propagate, max_iter, settled)
+    if changed[0]:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds — "
+            "raise max_iter (rounds needed ~ log2(component diameter))")
+    return labels
 
 
 def dedup_clusters(df: DataFrame, text_col: str = "text",

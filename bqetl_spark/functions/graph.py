@@ -12,10 +12,12 @@ which is what lets an iterative algorithm carry a full value-hash oracle.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bqetl_spark.caching import ckpt, drop_ckpt, pin
+from bqetl_spark.caching import ckpt, fixpoint, pin
 
 SCALE = 10**12  # fixed-point unit: 1.0 of rank mass == 10^12
 
@@ -57,6 +59,17 @@ def pagerank_fixed(edges: DataFrame, src: str = "src", dst: str = "dst",
     metadata scalars, same audit class as the IVF centroid collects.
     Returns (node, rank BIGINT).
     """
+    nodes, n, small, e = _walk_graph(edges, src, dst, iters, damping_pct,
+                                     broadcast_nodes_max)
+    return _rank_walk(e, nodes.withColumn("__is_seed", F.lit(1)), n, small,
+                      damping_pct, iters)
+
+
+def _walk_graph(edges: DataFrame, src: str, dst: str, iters: int,
+                damping_pct: int, broadcast_nodes_max: int):
+    """Validated inputs both PageRank variants walk: the pinned node table,
+    its size n, the broadcast decision, and the pinned edge list with
+    source out-degrees (__src, node, __outdeg)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     if not 0 < damping_pct < 100:
@@ -77,37 +90,45 @@ def pagerank_fixed(edges: DataFrame, src: str = "src", dst: str = "dst",
             .join(F.broadcast(outdeg) if small else outdeg, src)
             .select(F.col(src).alias("__src"), F.col(dst).alias("node"),
                     "__outdeg"))
-    base = ((100 - damping_pct) * SCALE) // (100 * n)
+    return nodes, n, small, e
+
+
+def _rank_walk(e: DataFrame, teleport: DataFrame, n_seeds: int, small: bool,
+               damping_pct: int, iters: int) -> DataFrame:
+    """The rank recurrence of :func:`pagerank_personalized`, with
+    ``teleport`` = (node, __is_seed) over every node and ``n_seeds`` = |S|;
+    pagerank_fixed is the case S = all nodes."""
+    base = ((100 - damping_pct) * SCALE) // (100 * n_seeds)
     # explicit long: at small n the literal would fit int32 and 85·rank
     # would constant-fold in 32-bit (ANSI overflow)
-    ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank"))
-    last_ck = None  # previous round's checkpoint, droppable once superseded
-    for i in range(iters):
-        rk = ranks.withColumnRenamed("node", "__src")
+    ranks = ckpt(teleport.select(
+        "node", (F.col("__is_seed").cast("long")
+                 * F.lit(SCALE // n_seeds).cast("long")).alias("rank")))
+
+    def iterate(ranks: DataFrame) -> DataFrame:
+        # zero-rank sources contribute floor(0) = 0 — dropping them is
+        # semantics-free and keeps the early-iteration rank broadcast at
+        # frontier size instead of graph size
+        rk = (ranks.filter(F.col("rank") > 0)
+              .withColumnRenamed("node", "__src"))
         contrib = (e.join(F.broadcast(rk) if small else rk, "__src")
                    .groupBy("node")
                    .agg(F.sum(F.floor(F.lit(damping_pct) * F.col("rank")
                                       / (100 * F.col("__outdeg"))))
                         .alias("__in")))
-        ranks = (nodes.join(contrib, "node", "left")
-                 .select("node", (F.lit(base)
-                                  + F.coalesce("__in", F.lit(0)))
-                         .cast("long").alias("rank")))
-        if i < iters - 1:
-            # EAGER localCheckpoint (r12): pin() cut re-execution but the
-            # lazy lineage still embedded the pinned edge-build subtree
-            # per iteration (static plan ~290 Exchange) and Catalyst/AQE
-            # paid for the whole tree at the final action; the checkpoint
-            # keeps the plan O(1) at one materializing job per iteration
-            # over the node-sized rank table. Interleaved A/B at sf0.1:
-            # median 19.5 -> 6.2 s (PLANS.md r12 opt session 3).
-            ranks = ranks.transform(ckpt)
-            # the new round is materialized (ckpt is eager): the round
-            # BEFORE it is dead — free its blocks now (r13, guide §5)
-            if last_ck is not None:
-                drop_ckpt(last_ck)
-            last_ck = ranks
-    return ranks
+        return (teleport.join(contrib, "node", "left")
+                .select("node",
+                        (F.col("__is_seed").cast("long") * F.lit(base)
+                         + F.coalesce("__in", F.lit(0)))
+                        .cast("long").alias("rank")))
+
+    # EAGER localCheckpoint per round (r12): a lazy lineage re-embedded
+    # the pinned edge build per round (~290 Exchange) and Catalyst/AQE
+    # paid for the whole tree at the final action; one job per round over
+    # the node-sized rank table instead. Interleaved A/B at sf0.1: median
+    # 19.5 -> 6.2 s (PLANS.md r12 opt session 3). The caller reads the
+    # last round once, so it stays lazy.
+    return iterate(fixpoint(ranks, iterate, iters - 1))
 
 
 def pagerank_personalized(edges: DataFrame, seeds: DataFrame,
@@ -135,60 +156,18 @@ def pagerank_personalized(edges: DataFrame, seeds: DataFrame,
     Returns (node, rank BIGINT); non-seed nodes unreachable from S stay
     at exactly 0.
     """
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    if not 0 < damping_pct < 100:
-        raise ValueError(f"damping_pct must be in (0,100), got {damping_pct}")
-    edges = pin(edges.select(F.col(src).alias(src), F.col(dst).alias(dst)))
-    nodes = pin(edges.select(F.col(src).alias("node"))
-                .union(edges.select(F.col(dst).alias("node")))
-                .distinct())
-    n = nodes.count()  # metadata scalar
-    small = n <= broadcast_nodes_max
+    nodes, n, small, e = _walk_graph(edges, src, dst, iters, damping_pct,
+                                     broadcast_nodes_max)
     seed_nodes = pin(seeds.select(F.col(seeds.columns[0]).alias("node"))
                      .distinct().join(nodes, "node"))
     ns = seed_nodes.count()  # metadata scalar
     if ns == 0:
         raise ValueError("no seed intersects the graph's node set")
-    outdeg = edges.groupBy(src).agg(F.count("*").alias("__outdeg"))
-    e = pin(edges.select(src, dst)
-            .join(F.broadcast(outdeg) if small else outdeg, src)
-            .select(F.col(src).alias("__src"), F.col(dst).alias("node"),
-                    "__outdeg"))
-    base = ((100 - damping_pct) * SCALE) // (100 * ns)
-    seeded = (nodes.join(
+    seeded = pin(nodes.join(
         (F.broadcast(seed_nodes) if small else seed_nodes)
         .withColumn("__is_seed", F.lit(1)), "node", "left")
         .select("node", F.coalesce("__is_seed", F.lit(0)).alias("__is_seed")))
-    seeded = pin(seeded)
-    ranks = seeded.select(
-        "node", (F.col("__is_seed").cast("long")
-                 * F.lit(SCALE // ns).cast("long")).alias("rank"))
-    last_ck = None  # previous round's checkpoint, droppable once superseded
-    for i in range(iters):
-        # zero-rank sources contribute floor(0) = 0 — dropping them is
-        # semantics-free and keeps the early-iteration rank broadcast at
-        # frontier size instead of graph size
-        rk = (ranks.filter(F.col("rank") > 0)
-              .withColumnRenamed("node", "__src"))
-        contrib = (e.join(F.broadcast(rk) if small else rk, "__src")
-                   .groupBy("node")
-                   .agg(F.sum(F.floor(F.lit(damping_pct) * F.col("rank")
-                                      / (100 * F.col("__outdeg"))))
-                        .alias("__in")))
-        ranks = (seeded.join(contrib, "node", "left")
-                 .select("node",
-                         (F.col("__is_seed").cast("long") * F.lit(base)
-                          + F.coalesce("__in", F.lit(0)))
-                         .cast("long").alias("rank")))
-        if i < iters - 1:
-            # same eager-checkpoint lineage cut as pagerank_fixed (r12)
-            # + superseded-round block drop (r13, guide §5)
-            ranks = ranks.transform(ckpt)
-            if last_ck is not None:
-                drop_ckpt(last_ck)
-            last_ck = ranks
-    return ranks
+    return _rank_walk(e, seeded, ns, small, damping_pct, iters)
 
 
 def cooccurrence_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -288,26 +267,23 @@ def sssp_distances(edges: DataFrame, seeds: DataFrame,
     dist = (seed_nodes.join(nodes, "node")
             .select("node", F.lit(0).cast("long").alias("dist"))
             .transform(ckpt))
-    for _ in range(max_rounds):
+
+    def relax(dist: DataFrame) -> DataFrame:
         relaxed = (e.join(dist.withColumnRenamed("node", "__src"), "__src")
                    .select(F.col("__dst").alias("node"),
                            (F.col("dist") + F.col("__w")).alias("dist")))
-        new_dist = (dist.unionByName(relaxed)
-                    .groupBy("node")
-                    .agg(F.min("dist").alias("dist"))
-                    .transform(ckpt))
-        changed = (new_dist.alias("n")
-                   .join(dist.alias("o"), "node", "left")
-                   .filter(F.col("o.dist").isNull()
-                           | (F.col("n.dist") < F.col("o.dist")))
-                   .limit(1).count())  # metadata scalar: early exit
-        # the changed-probe was the old round's last reader — free its
-        # checkpoint blocks now (r13, guide §5)
-        drop_ckpt(dist)
-        dist = new_dist
-        if changed == 0:
-            break
-    return dist
+        return (dist.unionByName(relaxed)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist")))
+
+    def unchanged(new: DataFrame, old: DataFrame) -> bool:
+        return (new.alias("n")
+                .join(old.alias("o"), "node", "left")
+                .filter(F.col("o.dist").isNull()
+                        | (F.col("n.dist") < F.col("o.dist")))
+                .limit(1).count()) == 0  # metadata scalar: early exit
+
+    return fixpoint(dist, relax, max_rounds, unchanged)
 
 
 def node_label(node) -> "F.Column":
@@ -530,7 +506,7 @@ def k_core(edges: DataFrame, k: int, a_col: str = "a", b_col: str = "b",
     # count unchanged (a killed node always owns >= 1 edge), so no
     # separate kill-count action per round (first cut paid ~5
     # jobs/round and ran 30s at sf0.01; this shape is ~4s).
-    prev = e.count()
+    sizes = [e.count()]
     # Broadcast gate for the per-round kill set (r13, guide §3.1): the
     # kill set is tiny in ROWS (25k at sf3) but Catalyst's ESTIMATE of
     # the agg+filter subplan scales with the edge list, so past ~sf1
@@ -543,24 +519,21 @@ def k_core(edges: DataFrame, k: int, a_col: str = "a", b_col: str = "b",
     # gate discipline).
     n_nodes = e.select("s").distinct().count()
     small = n_nodes <= broadcast_nodes_max
-    for _ in range(max_rounds):
+
+    def peel(e: DataFrame) -> DataFrame:
         deg = e.groupBy("s").agg(F.count("*").alias("__c"))
         kill = deg.filter(F.col("__c") < k).select("s")
         kb = F.broadcast(kill) if small else kill
-        e2 = (e.join(kb, "s", "left_anti")
-              .join(kb.withColumnRenamed("s", "d"), "d", "left_anti")
-              .select("s", "d")
-              .transform(ckpt))
-        n = e2.count()   # metadata scalar per round
-        # e2 is materialized: the previous round's checkpoint blocks are
-        # dead — drop them NOW instead of at release_pinned() (r13,
-        # guide §5: rounds x edge-list storage was the sf3 slope)
-        drop_ckpt(e)
-        if n == prev:    # no node peeled -> fixpoint (e2 == e)
-            e = e2
-            break
-        e, prev = e2, n
-    else:
+        return (e.join(kb, "s", "left_anti")
+                .join(kb.withColumnRenamed("s", "d"), "d", "left_anti")
+                .select("s", "d"))
+
+    def peeled_nothing(new: DataFrame, _old: DataFrame) -> bool:
+        sizes.append(new.count())  # metadata scalar per round
+        return sizes[-1] == sizes[-2]
+
+    e = fixpoint(e, peel, max_rounds, peeled_nothing)
+    if sizes[-1] != sizes[-2]:
         raise RuntimeError(
             f"k_core did not converge within {max_rounds} rounds — "
             f"raise max_rounds (the oracle unroll must match)")
@@ -610,17 +583,15 @@ def label_propagation(edges: DataFrame, iters: int = 5,
               .withColumn("lbl", F.col("node"))
               .transform(ckpt))
     w = Window.partitionBy("s").orderBy(F.desc("__c"), F.asc("lbl"))
-    for _ in range(iters):
+
+    def adopt(labels: DataFrame) -> DataFrame:
         neigh = (e.join(labels.withColumnRenamed("node", "d"), "d")
                  .groupBy("s", "lbl").agg(F.count("*").alias("__c")))
-        prev_lbl = labels
-        labels = (neigh.withColumn("__rn", F.row_number().over(w))
-                  .filter(F.col("__rn") == 1)
-                  .select(F.col("s").alias("node"), "lbl")
-                  .transform(ckpt))
-        # the new labeling is materialized — the previous round's
-        # checkpoint blocks are dead (r13, guide §5)
-        drop_ckpt(prev_lbl)
+        return (neigh.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .select(F.col("s").alias("node"), "lbl"))
+
+    labels = fixpoint(labels, adopt, iters)
     ws = Window.partitionBy("lbl")
     return (labels.select(F.col("node"),
                           F.col("lbl").alias("community"),
@@ -744,7 +715,7 @@ def hits_fixed(edges: DataFrame, src: str = "src", dst: str = "dst",
                  F.countDistinct("__dst").alias("nd")).first()
     small = max(gate["ns"], gate["nd"]) <= broadcast_nodes_max
 
-    def _norm(raw: DataFrame, key: str, col: str) -> DataFrame:
+    def _norm(raw: DataFrame, col: str) -> DataFrame:
         # in-plan one-row max attach (r12, VERDICT item 6): this was a
         # driver .collect() per phase — 2·iters single-scalar JOBS on top
         # of the real work (hits_scores was the slowest gate at 12.96 s,
@@ -753,43 +724,45 @@ def hits_fixed(edges: DataFrame, src: str = "src", dst: str = "dst",
         # its edge count) keeps the max on the executors; the div operand
         # types are unchanged (DECIMAL(31,0) div DECIMAL(20,0)) so the
         # result is bit-identical.
-        raw = pin(raw)
         mx = raw.agg(F.max(col).cast("decimal(20,0)").alias("__mx"))
         scaled = (F.expr(f"CAST({col} AS DECIMAL(20,0))")
                   * F.lit(HITS_SCALE).cast("decimal(10,0)"))
         return (raw.crossJoin(F.broadcast(mx))
-                .select(key, scaled.cast("decimal(31,0)").alias("__s"),
+                .select("node", scaled.cast("decimal(31,0)").alias("__s"),
                         "__mx")
-                .select(key, F.expr("__s div __mx")
-                        .cast("long").alias(col[:-4])))
+                .select("node", F.expr("__s div __mx")
+                        .cast("long").alias(col)))
 
     # Lineage discipline (the k_core/connected_components precedent):
-    # the in-plan max attach references each phase's raw aggregation
-    # TWICE (probe side + the one-row broadcast side), so an uncut
-    # logical tree doubles per phase — 2^(2·iters) growth that overflowed
-    # the canonicalizer's stack at iters=5. An EAGER localCheckpoint per
-    # phase truncates the plan to a leaf: one materializing job per
-    # phase (which the old driver-collect design also paid) and the
-    # final join reads the checkpointed leaves for free.
-    hubs = (e.select(F.col("__src").alias("node"))
-            .distinct()
-            .select("node", F.lit(HITS_SCALE).cast("long").alias("hub")))
-    auths = None
-    for i in range(iters):
-        hk = hubs.select(F.col("node").alias("__src"), "hub")
-        a_raw = (e.join(F.broadcast(hk) if small else hk, "__src")
-                 .groupBy("__dst")
-                 .agg(F.sum(F.col("hub").cast("decimal(20,0)"))
-                      .cast("long").alias("auth_raw")))
-        auths = _norm(a_raw, "__dst", "auth_raw").transform(ckpt)
-        h_raw = (e.join(F.broadcast(auths) if small else auths, "__dst")
-                 .groupBy("__src")
-                 .agg(F.sum(F.col("auth").cast("decimal(20,0)"))
-                      .cast("long").alias("hub_raw")))
-        hubs = (_norm(h_raw, "__src", "hub_raw")
-                .withColumnRenamed("__src", "node").transform(ckpt))
-    return (hubs.join(auths.withColumnRenamed("__dst", "node"),
-                      "node", "full")
+    # the max attach reads each phase's raw sums TWICE (probe side + the
+    # one-row broadcast side), so an uncut logical tree doubles per
+    # phase — 2^(2·iters) growth that overflowed the canonicalizer's
+    # stack at iters=5 — and an uncut raw aggregation runs twice. So each
+    # PHASE is one fixpoint round that checkpoints its RAW sums, and the
+    # next phase (or the output) normalizes them by reading that leaf
+    # twice. Hub and authority rows share one state table (node, hub,
+    # auth), one of the two NULL per row: a phase normalizes one role's
+    # raw sums, carries them over, and adds the other role's raw sums.
+    scores = ckpt(e.select(F.col("__src").alias("node")).distinct()
+                  .select("node", F.lit(HITS_SCALE).cast("long").alias("hub"),
+                          F.lit(None).cast("long").alias("auth")))
+    roles = itertools.cycle([("__src", "__dst", "hub", "auth"),
+                             ("__dst", "__src", "auth", "hub")])
+
+    def phase(scores: DataFrame) -> DataFrame:
+        key, out_key, fr, to = next(roles)
+        given = _norm(scores.filter(F.col(fr).isNotNull()), fr)
+        sk = given.withColumnRenamed("node", key)
+        raw = (e.join(F.broadcast(sk) if small else sk, key)
+               .groupBy(F.col(out_key).alias("node"))
+               .agg(F.sum(F.col(fr).cast("decimal(20,0)"))
+                    .cast("long").alias(to)))
+        return raw.unionByName(given, allowMissingColumns=True)
+
+    scores = fixpoint(scores, phase, 2 * iters)
+    return (_norm(scores.filter(F.col("hub").isNotNull()), "hub")
+            .join(scores.filter(F.col("auth").isNotNull())
+                  .select("node", "auth"), "node", "full")
             .select("node", "hub", "auth"))
 
 
@@ -820,10 +793,10 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame,
     the edge list + an anti-join against the visited set — the
     Pregel/GraphX BFS shape; the frontier/visited tables broadcast
     while the graph is small and fall back to shuffle joins beyond
-    ``broadcast_nodes_max``. Frontiers are pinned per round (lineage
-    cut, the k_core discipline). Returns (node, dist) for nodes within
-    ``max_hops`` of a seed; unreached nodes are absent (the caller
-    left-joins and coalesces a sentinel if needed).
+    ``broadcast_nodes_max``. The visited table is checkpointed per
+    round (lineage cut, the k_core discipline). Returns (node, dist) for
+    nodes within ``max_hops`` of a seed; unreached nodes are absent (the
+    caller left-joins and coalesces a sentinel if needed).
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
@@ -835,38 +808,30 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame,
              .union(e.select(F.col("__dst").alias("node"))).distinct())
     # seeds outside the graph get distance 0 rows only if they exist as
     # nodes — intersect keeps the metric about the graph, like ppr.
-    # EAGER localCheckpoints (r12): visited is referenced twice per
-    # round (anti-join + union) and nxt three times, so lazy pinned
+    # EAGER localCheckpoints (r12, via fixpoint): visited is referenced
+    # three times per round (frontier, anti-join, union), so lazy pinned
     # lineage compounded to a ~2,700-Exchange plan by round 4 that the
     # per-round count action re-planned each time; the checkpoints cut
-    # it to O(1) per round at no extra job (the count already
-    # materialized each round).
+    # it to O(1) per round. The frontier is the rows of the last round's
+    # distance, so the visited table is the whole loop state.
     visited = (seed_nodes.join(nodes, "node")
                .select("node", F.lit(0).cast("long").alias("dist"))
                .transform(ckpt))
-    frontier = visited.select("node")
-    small = True  # re-evaluated per round against the cap below
-    n_seen = visited.count()
-    prev_frontier_ck = None
-    for k in range(1, max_hops + 1):
-        small = n_seen <= broadcast_nodes_max
-        fr = frontier.withColumnRenamed("node", "__src")
+    n_seen = [visited.count()]
+
+    def expand(visited: DataFrame) -> DataFrame:
+        k = len(n_seen)  # this round's hop count
+        small = n_seen[-1] <= broadcast_nodes_max
+        fr = (visited.filter(F.col("dist") == k - 1)
+              .select(F.col("node").alias("__src")))
         nxt = (e.join(F.broadcast(fr) if small else fr, "__src")
                .select(F.col("__dst").alias("node")).distinct()
                .join(visited, "node", "left_anti")
-               .select("node", F.lit(k).cast("long").alias("dist"))
-               .transform(ckpt))
-        # this round's nxt is materialized: the previous frontier's
-        # checkpoint blocks had their last reader (r13, guide §5)
-        if prev_frontier_ck is not None:
-            drop_ckpt(prev_frontier_ck)
-        cnt = nxt.count()  # metadata scalar: drives early exit
-        if cnt == 0:
-            break
-        n_seen += cnt
-        prev_visited = visited
-        visited = visited.unionByName(nxt).transform(ckpt)
-        drop_ckpt(prev_visited)  # superseded by the new union
-        frontier = nxt.select("node")
-        prev_frontier_ck = nxt
-    return visited
+               .select("node", F.lit(k).cast("long").alias("dist")))
+        return visited.unionByName(nxt)
+
+    def no_new_node(new: DataFrame, _old: DataFrame) -> bool:
+        n_seen.append(new.count())  # metadata scalar: drives early exit
+        return n_seen[-1] == n_seen[-2]
+
+    return fixpoint(visited, expand, max_hops, no_new_node)

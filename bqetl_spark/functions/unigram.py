@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bqetl_spark.caching import ckpt, drop_ckpt, pin
+from bqetl_spark.caching import ckpt, fixpoint, pin
 from bqetl_spark.functions.bpe import word_freq_table
 
 # cost assigned to an unreachable DP position; far above any real path
@@ -188,20 +188,19 @@ def unigram_train(docs: DataFrame, iters: int = 2, keep_multi: int = 24,
     # vocab-sized table (which the lazy pin paid anyway on first use).
     vocab = (seed.join(chars, "token").unionByName(multi).distinct()
              .transform(ckpt))
-    for _ in range(iters):
+
+    def em_round(vocab: DataFrame) -> DataFrame:
         counts = _em_counts(wf, _cost_table(vocab), max_token_len)
         # chars get +1 smoothing (coverage can never collapse); pruned
         # multi-char tokens (count 0) leave the vocabulary
-        prev = vocab
-        vocab = (chars.join(counts, "token", "left")
-                 .select("token",
-                         (F.coalesce("c", F.lit(0)) + 1).alias("c"))
-                 .unionByName(
-                     counts.join(chars, "token", "left_anti")
-                     .filter(F.col("c") > 0))
-                 .transform(ckpt))
-        # superseded EM round's checkpoint blocks freed at once (r13, §5)
-        drop_ckpt(prev)
+        return (chars.join(counts, "token", "left")
+                .select("token",
+                        (F.coalesce("c", F.lit(0)) + 1).alias("c"))
+                .unionByName(
+                    counts.join(chars, "token", "left_anti")
+                    .filter(F.col("c") > 0)))
+
+    vocab = fixpoint(vocab, em_round, iters)
     final_multi = (vocab.filter(F.char_length("token") > 1)
                    .orderBy(F.desc("c"), F.asc("token")).limit(keep_multi))
     kept = (vocab.join(chars, "token").unionByName(final_multi)

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bqetl_spark.caching import ckpt, drop_ckpt
+from bqetl_spark.caching import ckpt, fixpoint
 from bqetl_spark.functions.bpe import word_freq_table
 
 WP_MERGE_SCHEMA = T.StructType([
@@ -100,17 +100,16 @@ def wordpiece_train(docs: DataFrame, n_merges: int = 8,
              .select("word", "freq", _encode_wp("word").alias("s"))
              .transform(ckpt))
     merges: list[tuple] = []
-    for k in range(1, n_merges + 1):
+
+    def merge_best_pair(vocab: DataFrame) -> DataFrame | None:
         sym = F.split(F.trim(F.col("s")), "  ")
         exploded = vocab.select("freq", sym.alias("sym"))
-        # materialized: both broadcast branches of the score join read it
-        # — otherwise the symbol-count aggregation runs twice per
-        # iteration (the l- and r-side exchanges don't unify)
+        # both broadcast branches of the score join read symcnt; AQE
+        # reuses its shuffle, so the aggregation runs once per round
         symcnt = (exploded
                   .select("freq", F.explode("sym").alias("t"))
                   .groupBy("t").agg(F.sum("freq").cast("long")
-                                    .alias("c"))
-                  .transform(ckpt))
+                                    .alias("c")))
         pairs = (exploded
                  .filter(F.size("sym") >= 2)
                  .select("freq", F.explode(F.expr(
@@ -135,24 +134,19 @@ def wordpiece_train(docs: DataFrame, n_merges: int = 8,
         best = (scored.orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
                 .limit(1).collect())
         if not best:
-            break
+            return None
         l, r = best[0]["l"], best[0]["r"]
         merged = l + _strip_cont(r)
-        merges.append((k, l, r, merged, int(best[0]["cnt"]),
+        merges.append((len(merges) + 1, l, r, merged, int(best[0]["cnt"]),
                        int(best[0]["score"])))
-        vocab = vocab.select(
+        if len(merges) == n_merges:
+            return None  # table full: the next vocab is never read
+        return vocab.select(
             "word", "freq",
             F.replace(F.col("s"), F.lit(f" {l}  {r} "),
                       F.lit(f" {merged} ")).alias("s"))
-        if k < n_merges:
-            # cut lineage eagerly: O(1) PLAN size per round, not just
-            # O(1) re-execution (vocab-sized job, r12); the superseded
-            # round's blocks (and this round's symbol-count table, whose
-            # last reader was the score collect) are freed at once (r13)
-            prev = vocab
-            vocab = vocab.transform(ckpt)
-            drop_ckpt(prev)
-            drop_ckpt(symcnt)
+
+    fixpoint(vocab, merge_best_pair, n_merges)
     return spark.createDataFrame(merges, WP_MERGE_SCHEMA)
 
 

@@ -15,11 +15,19 @@ semantic difference: a released CHECKPOINT cannot be re-executed (lineage
 is truncated), so release only after the output is fully materialized and
 rebuild the plan afterwards — which every caller (bench, sweep, tools)
 already does.
+
+Iterative operators run their rounds through caching.fixpoint(), which
+frees each superseded round: the storage an operator holds after its
+output is materialized must not depend on how many rounds it ran.
 """
 
 from __future__ import annotations
 
-from bqetl_spark.caching import release_pinned
+import pytest
+from pyspark.sql import functions as F
+
+from bqetl_spark.caching import ckpt, drop_ckpt, release_pinned
+from bqetl_spark.functions import bpe, dedup, graph, unigram, wordpiece
 from bqetl_spark.functions.dedup import minhash_lsh_pairs, ngram_jaccard_pairs
 from tests.conftest import SF_DIR
 
@@ -50,3 +58,85 @@ def test_release_is_idempotent_and_operator_reusable(spark):
     n2 = ngram_jaccard_pairs(docs).count()
     release_pinned()
     assert n1 == n2
+
+
+def _chain(spark, n):
+    """Undirected path 0-1-...-(n-1), both directions, as (src, dst, w)."""
+    rows = [(i, i + 1, 3) for i in range(n - 1)]
+    rows += [(b, a, w) for a, b, w in rows]
+    return spark.createDataFrame(rows, "src long, dst long, w long")
+
+
+def _canon_chain(spark, n):
+    """The same path as canonical (a < b) pairs."""
+    return spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
+                                 "a long, b long")
+
+
+def _seeds(spark):
+    return spark.createDataFrame([(0,)], "node long")
+
+
+def _docs(spark):
+    text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6
+                    + ["widest"] * 3 + ["lowest"] * 2)
+    return spark.createDataFrame([(1, text)], "doc_id long, text string")
+
+
+# loop -> (build(spark, rounds) -> output plan, two round counts). Loops
+# with a convergence probe run to more rounds on a longer chain.
+LOOPS = {
+    "pagerank_fixed": (lambda s, r: graph.pagerank_fixed(
+        _chain(s, 6), iters=r), (2, 5)),
+    "pagerank_personalized": (lambda s, r: graph.pagerank_personalized(
+        _chain(s, 6), _seeds(s), iters=r), (2, 5)),
+    "sssp_distances": (lambda s, r: graph.sssp_distances(
+        _chain(s, 12), _seeds(s), max_rounds=r), (2, 5)),
+    "bfs_distances": (lambda s, r: graph.bfs_distances(
+        _chain(s, 12), _seeds(s), max_hops=r), (2, 5)),
+    "k_core": (lambda s, r: graph.k_core(
+        _canon_chain(s, r), k=2), (4, 12)),
+    "label_propagation": (lambda s, r: graph.label_propagation(
+        _canon_chain(s, 6), iters=r), (2, 5)),
+    "hits_fixed": (lambda s, r: graph.hits_fixed(
+        _chain(s, 6), iters=r), (2, 5)),
+    "connected_components": (lambda s, r: dedup.connected_components(
+        _chain(s, r), driver_edges_max=0), (3, 40)),
+    "bpe_train": (lambda s, r: bpe.bpe_train(
+        _docs(s), n_merges=r), (2, 6)),
+    "wordpiece_train": (lambda s, r: wordpiece.wordpiece_train(
+        _docs(s), n_merges=r), (2, 6)),
+    "unigram_train": (lambda s, r: unigram.unigram_train(
+        _docs(s), iters=r, keep_multi=4, max_token_len=3), (1, 3)),
+}
+
+
+@pytest.mark.parametrize("loop", sorted(LOOPS))
+def test_iterative_storage_independent_of_round_count(spark, loop):
+    """Each loop holds the same storage after 'few' and 'many' rounds, and
+    release_pinned() returns the session to its baseline."""
+    build, rounds = LOOPS[loop]
+    release_pinned()
+    base = _n_persistent(spark)
+    held = []
+    for r in rounds:
+        build(spark, r).collect()  # materialize the operator's output
+        held.append(_n_persistent(spark) - base)
+        release_pinned()
+        assert _n_persistent(spark) == base, (loop, r)
+    assert held[0] == held[1], (loop, dict(zip(rounds, held)))
+
+
+def test_drop_ckpt_raises_on_non_checkpoints(spark):
+    """A projection of a checkpoint holds no blocks of its own, so
+    dropping it frees nothing — that must raise, not pass silently."""
+    release_pinned()
+    base = _n_persistent(spark)
+    vocab = ckpt(spark.range(5).withColumn("s", F.lit("a")))
+    with pytest.raises(TypeError, match="not a checkpointed frame"):
+        drop_ckpt(vocab.select("id", F.upper("s").alias("s")))
+    drop_ckpt(vocab)
+    assert _n_persistent(spark) == base
+    with pytest.raises(ValueError, match="not a tracked checkpoint"):
+        drop_ckpt(vocab)  # already freed
+    release_pinned()

@@ -32,31 +32,43 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-# The CURRENT round's head: brand-new gates (no driver row yet) and gates
-# whose code/oracle changed this round. Update this each round; the
+# The CURRENT round's head: brand-new gates (no driver row yet), gates
+# whose code/oracle changed this round, and the newest CORRECTNESS round
+# the order is computed against. Update this each round; the
 # --new/--changed CLI flags override it. tests/test_entry.py pins the
 # queries() dict order to compute_order(..., **ROUND_HEAD), so a stale
-# constant fails the suite instead of silently drifting.
+# constant fails the suite instead of silently drifting; history files of
+# rounds after "through_round" are ignored, so a round-end CORRECTNESS
+# artifact landing cannot reorder the window behind the dict's back.
 ROUND_HEAD = {
-    # r13 head (optimization round — no new gates). phash_dihedral is
-    # the one gate whose ORACLE changed this round: the r12 driver red
-    # (HUGEINT output column → float64 precision loss under the driver's
-    # fetch path) is fixed by casting the bit-pack sums to BIGINT; it is
-    # also auto-new (never driver-green), so it stays at the window head
-    # for re-evaluation either way.
+    # r14 head (no new gates). The changed gates are the ones whose
+    # iterative operator loops moved onto caching.fixpoint: the graph
+    # family, connected_components (dedup), and the three trainers with
+    # their segments/fertility composers.
+    "through_round": 13,
     "new_first": [],
-    "changed": ["phash_dihedral"],
+    "changed": [
+        "pagerank", "ppr_seeded", "sssp_hops", "bfs_distances",
+        "kcore_parts", "lpa_communities", "lpa_modularity", "hits_scores",
+        "dedup_clusters", "dedup_keep_best",
+        "bpe_train", "bpe_segments", "bpe_fertility",
+        "wordpiece_train", "wordpiece_segments", "wordpiece_fertility",
+        "unigram_train", "unigram_segments", "unigram_fertility",
+    ],
 }
 
 
-def gate_history(repo=REPO):
-    """gate -> newest round with a GREEN driver row (0 = never)."""
+def gate_history(repo=REPO, through_round=ROUND_HEAD["through_round"]):
+    """gate -> newest round <= ``through_round`` with a GREEN driver row
+    (0 = never)."""
     newest = {}
     for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         rnd = int(m.group(1))
+        if rnd > through_round:
+            continue
         with open(path) as f:
             data = json.load(f)
         for gate, row in data.items():
@@ -79,7 +91,14 @@ def all_gates(repo=REPO):
     return list(__spark_entry__.queries().keys())
 
 
-def compute_order(gates, newest, changed=(), new_first=()):
+def compute_order(gates, newest, changed=(), new_first=(),
+                  through_round=None):
+    """Full gate order. ``through_round`` (optional) asserts that
+    ``newest`` holds no round after it — i.e. that the history was read
+    with the same cut as ROUND_HEAD."""
+    if through_round is not None and max(newest.values(), default=0) > through_round:
+        raise ValueError("history newer than through_round=%d; read it with "
+                         "gate_history(through_round=%d)" % (through_round, through_round))
     changed = [g for g in changed if g in gates]
     explicit_new = [g for g in new_first if g in gates]
     auto_new = [g for g in gates if newest.get(g, 0) == 0 and g not in explicit_new]
