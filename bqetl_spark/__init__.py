@@ -19,6 +19,10 @@ Layout
                  embedding similarity — the LLM-data-pipeline extensions.
 - ``plans``      end-to-end pipelines mirroring BQETLSimple / BQETLNested.
 - ``streaming``  Structured Streaming ingest of the events table.
+- ``gates``      the driver-contract gate registry: one module per family,
+                 each builder registered with ``@gate(oracle=...)`` below
+                 its DuckDB SQL. Not imported here (it loads most of the
+                 engine); ``__spark_entry__`` reads it.
 """
 
 __version__ = "0.1.0"

@@ -78,26 +78,56 @@ def test_gate_outputs_are_scalar(spark, name):
                      "(posexplode / per-component columns)")
 
 
-def test_window_order_matches_tool():
-    """r7: the queries() dict order (= the driver-window schedule) is
-    GENERATED by tools/window_order.py from the CORRECTNESS_r* history +
-    ROUND_HEAD; this pin makes the ordering-contract comment unable to
-    drift from reality (r6 verdict item 1)."""
-    import os
-    import sys
+def test_later_correctness_round_does_not_reorder_queries(tmp_path):
+    """queries() orders the gates at call time from the CORRECTNESS_r*
+    history; a round-end artifact of a round after ROUND_HEAD's cut must
+    not reorder the driver window mid-round."""
+    import glob
+    import json
+    import shutil
 
-    tools = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "tools")
-    sys.path.insert(0, tools)
-    try:
-        import window_order as wo
-    finally:
-        sys.path.remove(tools)
+    for path in glob.glob(os.path.join(entry_mod.REPO, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+    gates = list(QUERIES)
+    later = {g: {"hash_match": True} for g in gates[50:]}
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(later))
 
-    import __spark_entry__ as em
+    assert entry_mod.gate_history(str(tmp_path), through_round=99) != \
+        entry_mod.gate_history()
+    history = entry_mod.gate_history(str(tmp_path))
+    assert history == entry_mod.gate_history()
+    assert entry_mod.compute_order(gates, history,
+                                   **entry_mod.ROUND_HEAD) == gates
 
-    gates = list(em.queries().keys())
-    want = wo.compute_order(gates, wo.gate_history(), **wo.ROUND_HEAD)
-    assert gates == want, (
-        "queries() dict order does not match tools/window_order.py output "
-        "— regenerate the dict or update ROUND_HEAD")
+
+def test_duplicate_gate_name_is_rejected():
+    from bqetl_spark.gates import gate, registry
+
+    before = dict(registry())
+
+    def q_denorm_flat(spark, sf_dir):
+        raise AssertionError("never built")
+
+    with pytest.raises(ValueError, match="denorm_flat"):
+        gate(oracle="SELECT 1")(q_denorm_flat)
+    assert registry() == before
+
+
+def test_gate_builders_leave_no_scratch_behind(spark, tmp_path, monkeypatch):
+    """A streaming gate (memory-sink replay) and a round-trip gate (table
+    written to scratch and read back), each built twice: no memory-sink
+    view stays registered, and the round trip reuses one scratch dir."""
+    import tempfile
+
+    from bqetl_spark.caching import release_pinned
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ("stream_events_hourly", "orc_roundtrip") * 2:
+        assert QUERIES[name](spark, SF_DIR).count() > 0
+        release_pinned()
+
+    views = [t.name for t in spark.catalog.listTables()
+             if t.name.startswith("__stream_gate_")]
+    assert views == []
+    assert os.listdir(tmp_path) == ["bqetl_scratch"]
+    assert len(os.listdir(tmp_path / "bqetl_scratch")) == 1
