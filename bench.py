@@ -245,7 +245,7 @@ def main() -> None:
         release_pinned()
         extras[name] = round(best, 3)
 
-    for line in format_output(timings, extras, duckdb_timings(), SF_DIR):
+    for line in format_output(timings, extras, duckdb_timings(HEADLINE, SF_DIR), SF_DIR):
         print(line)
     spark.stop()
 
@@ -281,10 +281,10 @@ def format_output(timings: dict, extras: dict, duck: dict,
 DUCK_CAP_SEC = 60.0  # all-pairs near-dup oracles get expensive at sf>=0.1
 
 
-def duckdb_timings() -> dict[str, float | None]:
-    """Wall-time the headline queries' DuckDB equivalents (oracle_sql) on
-    the same parquet tables — a measurable single-node baseline instead of
-    a vacuous one. Queries past DUCK_CAP_SEC are interrupted -> null."""
+def duckdb_timings(names: list[str], sf_dir: str) -> dict[str, float | None]:
+    """Wall-time the named gates' DuckDB equivalents (oracle_sql) on the
+    parquet tables in ``sf_dir`` — a measurable single-node baseline instead
+    of a vacuous one. Queries past DUCK_CAP_SEC are interrupted -> null."""
     import threading
 
     import duckdb
@@ -295,10 +295,10 @@ def duckdb_timings() -> dict[str, float | None]:
     osql = entry_mod.oracle_sql()
     con = duckdb.connect()
     for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     out: dict[str, float | None] = {}
-    for name in HEADLINE:
+    for name in names:
         sql = osql.get(name)
         if sql is None:
             out[name] = None

@@ -88,27 +88,6 @@ def _perm_params(num_perm: int) -> list[tuple[int, int]]:
     return params
 
 
-def minhash_signature(shingle_col, num_perm: int = 64):
-    """MinHash signature via the (a*x + b) mod p permutation family over
-    31-bit-reduced xxhash64 shingle values, as array expressions.
-    p = 2^31-1 (Mersenne).
-
-    NOTE: fine for small num_perm / ad-hoc use; ``minhash_lsh_pairs`` uses
-    the explode+groupBy formulation instead, which stays in whole-stage
-    codegen and map-side-combines (64 array folds per row do not)."""
-    p = F.lit(_MERSENNE31)
-    x31 = F.transform(shingle_col, lambda x: F.pmod(x, p))
-
-    def perm(a: int, b: int):
-        # closure factory: PySpark reads lambda arity, so capture via scope,
-        # never via default args
-        return lambda x: F.pmod(x * F.lit(a) + F.lit(b), p)
-
-    sig = [F.array_min(F.transform(x31, perm(a, b)))
-           for a, b in _perm_params(num_perm)]
-    return F.array(*sig)
-
-
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n_shingle: int = 3,
                       num_perm: int = 64, bands: int = 16,

@@ -180,12 +180,6 @@ def word_ngrams_all_of(toks: Column | str, n: int = 2) -> Column:
     return F.transform(idx, gram)
 
 
-def word_ngrams_all(col: Column | str, n: int = 2) -> Column:
-    """ALL word n-grams (multiset — unlike ``dedup.word_ngrams`` this does
-    not dedupe), for repetition/frequency analysis."""
-    return word_ngrams_all_of(tokens(col), n)
-
-
 def gram_repetition(df: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id", n: int = 2) -> DataFrame:
     """Gopher-style repetition score: fraction of a document's n-grams

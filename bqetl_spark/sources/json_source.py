@@ -59,6 +59,24 @@ def keyed(df: DataFrame, name: str, key_name: str) -> DataFrame:
     return df.withColumn(key_col, F.col(key_col).try_cast(T.LongType()))
 
 
+def _infer_schema(spark: SparkSession, lines: DataFrame) -> T.StructType:
+    """The schema ``spark.read.json`` infers for a one-column DataFrame of
+    non-null lines. PySpark's reader takes only paths or RDDs (the
+    Dataset[String] overload is Scala-only), so the lines are spilled to a
+    temp text dir — JVM-side inference, executor-parallel, no Python row
+    round-trip. Reading ``.schema`` is eager, so the spill is removed
+    before the caller's plan exists."""
+    import shutil
+    import tempfile
+
+    tmp = tempfile.mkdtemp(prefix="bqetl_lines_")
+    try:
+        lines.write.mode("overwrite").text(tmp)
+        return spark.read.option("primitivesAsString", "false").json(tmp).schema
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
 def load_table_from_text(spark: SparkSession, lines: DataFrame | str, name: str,
                          key_name: str | None = None,
                          schema: T.StructType | None = None) -> DataFrame:
@@ -80,20 +98,10 @@ def load_table_from_text(spark: SparkSession, lines: DataFrame | str, name: str,
             df = reader.option("primitivesAsString", "false").json(lines)
     else:
         str_col = lines.columns[0]
-        if schema is not None:
-            df = lines.select(F.from_json(F.col(str_col), schema).alias("r")).select("r.*")
-        else:
-            # Schema inference over an in-memory lines DF: PySpark's reader
-            # takes only paths or RDDs (the Dataset[String] overload is
-            # Scala-only), so spill the lines to a temp text dir and take the
-            # file branch — JVM-side inference, executor-parallel, no Python
-            # row round-trip.
-            import tempfile
-
-            tmp = tempfile.mkdtemp(prefix="bqetl_lines_")
-            (lines.select(F.col(str_col).cast("string").alias("value"))
-             .na.drop().write.mode("overwrite").text(tmp))
-            df = spark.read.option("primitivesAsString", "false").json(tmp)
+        if schema is None:
+            lines = lines.select(F.col(str_col).cast("string").alias(str_col)).na.drop()
+            schema = _infer_schema(spark, lines)
+        df = lines.select(F.from_json(F.col(str_col), schema).alias("r")).select("r.*")
     df = namespace_columns(df, name)
     if key_name is not None:
         df = keyed(df, name, key_name)

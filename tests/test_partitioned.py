@@ -7,7 +7,6 @@ pruned read returns exactly the rows a full-scan filter would.
 """
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -15,12 +14,12 @@ from bqetl_spark.sources.partitioned import (
     partition_filters, prunes_partitions, read_partitioned, write_partitioned)
 
 
-def test_partitioned_write_prunes_on_read(spark):
+def test_partitioned_write_prunes_on_read(spark, tmp_path):
     df = spark.range(1000).select(
         F.col("id"),
         (F.col("id") % 7).alias("day"),
         (F.col("id") * 3).alias("value"))
-    out = os.path.join(tempfile.mkdtemp(prefix="bqetl_part_"), "t")
+    out = str(tmp_path / "t")
     write_partitioned(df, out, ["day"])
 
     # one directory per partition value
@@ -39,10 +38,10 @@ def test_partitioned_write_prunes_on_read(spark):
         [i for i in range(1000) if i % 7 == 3]
 
 
-def test_partition_pruning_range_predicate(spark):
+def test_partition_pruning_range_predicate(spark, tmp_path):
     df = spark.range(300).select(
         F.col("id"), (F.col("id") % 10).alias("shard"))
-    out = os.path.join(tempfile.mkdtemp(prefix="bqetl_part_"), "t")
+    out = str(tmp_path / "t")
     write_partitioned(df, out, ["shard"])
     back = read_partitioned(spark, out)
     ranged = back.filter((F.col("shard") >= 2) & (F.col("shard") < 5))

@@ -1,3 +1,5 @@
+import tempfile
+
 from pyspark.sql import functions as F
 
 from bqetl_spark.sources.json_source import load_table_from_text, load_text, namespace_columns
@@ -38,6 +40,17 @@ def test_in_memory_lines_source(spark):
     df = load_table_from_text(spark, lines, "t")
     row = df.first()
     assert row["t_id"] == 7 and row["t_name"] == "x"
+
+
+def test_in_memory_lines_leave_no_spill(spark, tmp_path, monkeypatch):
+    # schema inference spills the lines to a temp dir; it must not outlive
+    # the call (every gate run used to leave one bqetl_lines_* dir behind)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    lines = spark.createDataFrame([('{"id": 7, "name": "x"}',), (None,)], ["value"])
+    for _ in range(2):
+        df = load_table_from_text(spark, lines, "t")
+        assert [tuple(r) for r in df.collect()] == [(7, "x")]
+    assert not list(tmp_path.glob("bqetl_lines_*"))
 
 
 def test_int_widened_to_long(spark, mb_bucket):
