@@ -313,11 +313,6 @@ def word_ngrams_of(toks, n: int = 3):
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))))
 
 
-def word_ngrams(text_col, n: int = 3):
-    """Distinct word n-gram strings (n consecutive whitespace tokens)."""
-    return word_ngrams_of(tokens(text_col), n)
-
-
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.5,

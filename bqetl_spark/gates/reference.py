@@ -201,11 +201,12 @@ def q_ndjson_roundtrip(spark, sf_dir):
     """Parity loader in the gate: serialize documents to NDJSON lines
     (distributed, no collect), re-parse through the S2/S6 loader with P2
     namespacing (json_source.load_table_from_text), un-namespace, compare
-    against the plain table via the oracle."""
-    docs = _t(spark, sf_dir, "documents")
-    lines = docs.select(F.to_json(F.struct("doc_id", "lang", "n_chars"))
-                        .alias("value"))
-    parsed = load_table_from_text(spark, lines, "documents", key_name="doc_id")
+    against the plain table via the oracle. The read schema is the
+    serialized struct's, so the loader runs no inference job."""
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
+    lines = docs.select(F.to_json(F.struct(*docs.columns)).alias("value"))
+    parsed = load_table_from_text(spark, lines, "documents", key_name="doc_id",
+                                  schema=docs.schema)
     return parsed.select(
         F.col("documents_doc_id").alias("doc_id"),
         F.col("documents_lang").alias("lang"),

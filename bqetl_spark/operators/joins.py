@@ -106,13 +106,17 @@ def apply_lookups(spark: SparkSession, bucket: str, fact: DataFrame,
                   fact_table: str, lookups: list[LookupDescription]) -> DataFrame:
     """Load each lookup's dimension file and apply it
     (parity: loadTable with LookupDescriptions,
-    MusicBrainzTransforms.java:336-346 → :436-454)."""
-    from bqetl_spark.sources.json_source import load_table_from_text, table_path
+    MusicBrainzTransforms.java:336-346 → :436-454). A dimension is read
+    with a declared schema of just its key and value fields, as strings —
+    ``lookup`` try_casts the key and stringifies the fallback itself — so
+    no inference job scans the file."""
+    from bqetl_spark.sources.json_source import load_table_from_text, string_schema, table_path
 
     out = fact
     for desc in lookups:
         dim = load_table_from_text(
-            spark, table_path(bucket, desc.source_table), desc.source_table)
+            spark, table_path(bucket, desc.source_table), desc.source_table,
+            schema=string_schema([desc.key_key, desc.value_key]))
         out = lookup(out, dim, fact_table, desc)
     return out
 

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from bqetl_spark.operators.joins import LookupDescription, inner_join
 from bqetl_spark.operators.project import project_to_schema
 from bqetl_spark.schema import SchemaBuilder
-from bqetl_spark.sources.json_source import load_table
+from bqetl_spark.sources.json_source import column_names, keyed, load_table, read_schemas
 
 
 def simple_output_schema(lookups: bool = False) -> T.StructType:
@@ -63,6 +63,20 @@ def simple_output_schema(lookups: bool = False) -> T.StructType:
     return b.build()
 
 
+TABLES = ("artist", "artist_credit_name", "recording")
+# the two equi-joins (BQETLSimple.java:84-95), left key then right key
+JOINS = (("artist_id", "artist_credit_name_artist"),
+         ("artist_credit_name_artist_credit", "recording_artist_credit"))
+
+
+def simple_read_schemas(lookups: bool = False) -> dict[str, T.StructType]:
+    """Per-table NDJSON read schemas: the output columns plus the join
+    keys (the lookup FKs are output columns), all strings."""
+    keys = [k for pair in JOINS for k in pair]
+    return read_schemas(column_names(simple_output_schema(lookups)) + keys,
+                        TABLES)
+
+
 def bqetl_simple(spark: SparkSession, bucket: str,
                  perform_lookups: bool = False) -> DataFrame:
     lookups = None
@@ -72,15 +86,17 @@ def bqetl_simple(spark: SparkSession, bucket: str,
             LookupDescription("area", "id", "name", ["area", "begin_area"]),
             LookupDescription("gender", "id", "name", ["gender"]),
         ]
-    artists = load_table(spark, bucket, "artist", key_name="id", lookups=lookups)
-    credits = load_table(spark, bucket, "artist_credit_name", key_name="artist")
-    recordings = load_table(spark, bucket, "recording", key_name="artist_credit")
+    schemas = simple_read_schemas(perform_lookups)
+    artists = load_table(spark, bucket, "artist", key_name="id",
+                         lookups=lookups, schema=schemas["artist"])
+    credits = load_table(spark, bucket, "artist_credit_name",
+                         key_name="artist", schema=schemas["artist_credit_name"])
+    recordings = load_table(spark, bucket, "recording",
+                            key_name="artist_credit", schema=schemas["recording"])
 
-    joined = inner_join(artists, credits,
-                        "artist_id", "artist_credit_name_artist")
-    # re-key by artist_credit (BQETLSimple.java:89-91) is implicit — the key
-    # is just the join column of the next join.
-    joined = inner_join(joined, recordings,
-                        "artist_credit_name_artist_credit",
-                        "recording_artist_credit")
+    joined = inner_join(artists, credits, *JOINS[0])
+    # re-key by artist_credit (BQETLSimple.java:89-91): the key is just the
+    # join column of the next join, cast to long like every key
+    joined = keyed(joined, "artist_credit_name", "artist_credit")
+    joined = inner_join(joined, recordings, *JOINS[1])
     return project_to_schema(joined, simple_output_schema(perform_lookups))

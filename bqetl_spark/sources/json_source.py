@@ -11,14 +11,32 @@ Parity targets:
 
 Spark-first notes: instead of parsing JSON per line in Python the way the
 reference parses per line with Jackson, we hand the whole file to
-``spark.read.json`` (JVM-side, vectorized, schema inference or explicit
-StructType). "Keying" a collection is a no-op in Spark — the key is just a
-named column later used in joins/groupBys — so S3/P3 reduce to remembering
-the key column name and casting it to long (cast failure → NULL, matching
+``spark.read.json`` (JVM-side, vectorized). "Keying" a collection is a
+no-op in Spark — the key is just a named column later used in
+joins/groupBys — so S3/P3 reduce to remembering the key column name and
+casting it to long (cast failure → NULL, matching
 MusicBrainzTransforms.java:75-78).
+
+Read schemas: without one, ``spark.read.json`` runs an inference job that
+scans the whole file before the plan exists, and the action scans it
+again. The pipelines know every column they use (the declared output
+schema plus the join and lookup keys), so ``read_schemas`` derives one
+read schema per table from those names, each field declared a string.
+The typing then happens where it always did — the ``try_cast`` in
+``project_to_schema``, ``keyed`` and ``joins.lookup`` — so a JSON number,
+a quoted number and a string boolean cast to the same values the inferred
+types gave. One departure: a float in a field declared INTEGER (say
+``1.0``) reads as the string ``"1.0"``, which ``try_cast`` turns into
+NULL, where an all-float column used to be inferred as double and
+truncated. For a key that is the reference's own result (its
+``Long.parseLong`` of the Double's text throws, MusicBrainzTransforms.java
+:75-78); for another INTEGER field the reference hands the Double to
+BigQuery. Only the generic path loader without a schema still infers.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +75,41 @@ def keyed(df: DataFrame, name: str, key_name: str) -> DataFrame:
     # try_cast: malformed key → NULL, matching the reference's
     # NumberFormatException → null (not an ANSI runtime error).
     return df.withColumn(key_col, F.col(key_col).try_cast(T.LongType()))
+
+
+def string_schema(names: Iterable[str]) -> T.StructType:
+    """A read schema declaring each named field (first occurrence, in
+    order) as a string."""
+    return T.StructType([T.StructField(n, T.StringType())
+                         for n in dict.fromkeys(names)])
+
+
+def column_names(schema: T.StructType) -> list[str]:
+    """The flat column names behind an output schema. A RECORD (repeated
+    or not) contributes its children's names, not its own: the pipeline
+    builds it, nothing reads it."""
+    out: list[str] = []
+    for f in schema.fields:
+        t = f.dataType.elementType if isinstance(f.dataType, T.ArrayType) \
+            else f.dataType
+        out += column_names(t) if isinstance(t, T.StructType) else [f.name]
+    return out
+
+
+def read_schemas(columns: Iterable[str],
+                 tables: Iterable[str]) -> dict[str, T.StructType]:
+    """One all-string read schema per table from namespaced column names
+    (``{table}_{field}``, see ``namespace_columns``). A name goes to the
+    longest table it is prefixed by, so ``artist_credit_name_name`` is a
+    field of ``artist_credit_name``, not ``credit_name_name`` of
+    ``artist``; names of no listed table are ignored."""
+    by_len = sorted(tables, key=len, reverse=True)
+    fields: dict[str, list[str]] = {t: [] for t in tables}
+    for c in columns:
+        t = next((t for t in by_len if c.startswith(f"{t}_")), None)
+        if t is not None:
+            fields[t].append(c[len(t) + 1:])
+    return {t: string_schema(names) for t, names in fields.items()}
 
 
 def _infer_schema(spark: SparkSession, lines: DataFrame) -> T.StructType:

@@ -33,16 +33,9 @@ def _read_events_stream(spark: SparkSession, events_dir: str,
     # found this the hard way)
     import os
 
-    from bqetl_spark.sources.parquet_source import ensure_ltz
+    from bqetl_spark.sources.parquet_source import events_ts_micros, parquet_schema
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # scan-level LTZ: Spark 4 infers tz-less parquet timestamps as
-    # TIMESTAMP_NTZ, which watermarks reject — read them as LTZ instead
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(spark, events_dir)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -51,10 +44,7 @@ def _read_events_stream(spark: SparkSession, events_dir: str,
         stream = reader.option("pathGlobFilter", fname).parquet(base)
     else:
         stream = reader.parquet(events_dir)
-    if dict(stream.dtypes).get("ts") == "bigint":
-        # integer division — see sources.parquet_source.load_events
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return ensure_ltz(stream)
+    return events_ts_micros(stream)
 
 
 def stream_click_to_purchase(spark: SparkSession, events_dir: str,

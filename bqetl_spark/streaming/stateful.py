@@ -13,8 +13,9 @@ list) and the shuffle that co-locates keys, both of which this obeys.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bqetl_spark.sources.parquet_source import parquet_schema
 
 STATE_SCHEMA = T.StructType([
     T.StructField("n", T.LongType()),
@@ -35,13 +36,7 @@ def stream_user_totals(spark: SparkSession, events_dir: str) -> DataFrame:
     ``writeStream.outputMode("update").trigger(availableNow=True)`` for a
     bounded replay. Emits one snapshot row per user per micro-batch.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        # Spark 4: read tz-less parquet timestamps as LTZ (watermark-friendly)
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(spark, events_dir)
     import os
 
     if events_dir.endswith(".parquet") and os.path.isfile(events_dir):
@@ -100,12 +95,7 @@ def stream_session_counts(spark: SparkSession, events_dir: str,
     Exact late-data handling needs buffered state + a watermark (an
     event-time session window), which trades bounded per-key state for it;
     this operator deliberately keeps the O(1) state."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    schema = spark.read.parquet(events_dir).schema
+    schema = parquet_schema(spark, events_dir)
     import os
 
     if events_dir.endswith(".parquet") and os.path.isfile(events_dir):

@@ -31,6 +31,22 @@ def spark():
     s.stop()
 
 
+def spark_jobs(spark, fn) -> int:
+    """How many Spark jobs ``fn()`` starts on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 # ---- MusicBrainz-analog fixture bucket ------------------------------------
 
 ARTISTS = [

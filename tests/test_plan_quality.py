@@ -109,3 +109,18 @@ def test_no_unjustified_nested_loop_join(spark, name):
                 f"{name}: {marker} in plan — a scale-killer unless the "
                 f"loop side is provably metadata-sized; audit and "
                 f"allowlist it or fix the plan")
+
+
+@pytest.mark.parametrize("pipeline", ["simple", "simple_lookups", "nested"])
+def test_etl_pipeline_build_runs_no_jobs(spark, mb_bucket, pipeline):
+    """The paper's pipelines declare their NDJSON read schemas, so
+    building one plans everything and scans nothing: a schema-inference
+    job would scan each input once before the action scans it again."""
+    from bqetl_spark.plans.etl_nested import bqetl_nested
+    from bqetl_spark.plans.etl_simple import bqetl_simple
+    from tests.conftest import spark_jobs
+
+    build = {"simple": lambda: bqetl_simple(spark, mb_bucket),
+             "simple_lookups": lambda: bqetl_simple(spark, mb_bucket, True),
+             "nested": lambda: bqetl_nested(spark, mb_bucket)}[pipeline]
+    assert spark_jobs(spark, build) == 0

@@ -1,5 +1,6 @@
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from bqetl_spark.sources.json_source import load_table_from_text, load_text, namespace_columns
@@ -259,3 +260,91 @@ def test_pyds_pushdown_unsupported_filter_returned(spark, tmp_path):
     df = (spark.read.format("bqetl_ndjson").schema(schema).load(str(d))
           .where(F.col("ok") & F.col("s").startswith("ab")))
     assert sorted(r["id"] for r in df.collect()) == [1]
+
+
+def test_declared_string_read_float_in_integer_field_is_null(spark, tmp_path):
+    """The one documented departure of the all-string read schemas: a
+    float in a field declared INTEGER reads as its JSON text, which
+    try_cast turns into NULL (an all-float column used to be inferred as
+    double and truncated)."""
+    from pyspark.sql import types as T
+
+    from bqetl_spark.operators.project import project_to_schema
+    from bqetl_spark.sources.json_source import string_schema
+
+    p = tmp_path / "f.json"
+    p.write_text('{"n": 1.0}\n{"n": 2.5}\n{"n": "3"}\n')
+    df = load_table_from_text(spark, str(p), "f", schema=string_schema(["n"]))
+    out = project_to_schema(df, T.StructType([T.StructField("f_n", T.LongType())]))
+    assert sorted((r[0] for r in out.collect()), key=lambda v: (v is None, v)) \
+        == [3, None, None]
+
+
+# --- parquet schema memo -------------------------------------------------
+
+
+@pytest.fixture
+def fresh_memo(monkeypatch):
+    from collections import OrderedDict
+
+    from bqetl_spark.sources import parquet_source
+
+    monkeypatch.setattr(parquet_source, "_memo", OrderedDict())
+    return parquet_source
+
+
+def test_parquet_schema_memo_skips_footer_jobs_until_overwrite(
+        spark, tmp_path, fresh_memo):
+    from bqetl_spark.sources.parquet_source import load_parquet_table
+    from tests.conftest import spark_jobs
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a")], "id bigint, x string").write.parquet(path)
+    assert spark_jobs(spark, lambda: load_parquet_table(spark, str(tmp_path), "t")) >= 1
+    assert spark_jobs(spark, lambda: load_parquet_table(spark, str(tmp_path), "t")) == 0
+
+    spark.createDataFrame([(2, "b", 9.5)], "id bigint, x string, score double") \
+        .write.mode("overwrite").parquet(path)
+    df = load_parquet_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "x", "score"]
+    assert [tuple(r) for r in df.collect()] == [(2, "b", 9.5)]
+
+
+def test_parquet_schema_memo_is_bounded(spark, tmp_path, fresh_memo, monkeypatch):
+    monkeypatch.setattr(fresh_memo, "SCHEMA_MEMO_MAX", 2)
+    for i in range(4):
+        path = str(tmp_path / f"t{i}.parquet")
+        spark.createDataFrame([(i,)], "id bigint").write.parquet(path)
+        assert fresh_memo.parquet_schema(spark, path).fieldNames() == ["id"]
+    assert len(fresh_memo._memo) == 2
+    # least recently used out first: the last two paths stay
+    assert [k[0] for k in fresh_memo._memo] == [
+        str(tmp_path / "t2.parquet"), str(tmp_path / "t3.parquet")]
+
+
+def test_star_gates_leave_parquet_confs_as_found(spark, fresh_memo):
+    """Reading the star tables sets the two parquet inference confs only
+    while a schema is inferred; a session's own values survive both a
+    batch gate (denorm_flat) and a streaming one (stream_kmv)."""
+    import __spark_entry__ as em
+    from tests.conftest import SF_DIR
+
+    keys = tuple(fresh_memo.INFER_CONF)
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    # the opposite of what inference needs, so a leak would show
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    try:
+        before = {k: spark.conf.getAll.get(k) for k in keys}
+        qs = em.queries()
+        for name in ("denorm_flat", "stream_kmv"):
+            assert qs[name](spark, SF_DIR).count() > 0
+            assert {k: spark.conf.getAll.get(k) for k in keys} == before, name
+        assert before == {"spark.sql.legacy.parquet.nanosAsLong": None,
+                          "spark.sql.parquet.inferTimestampNTZ.enabled": "true"}
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
