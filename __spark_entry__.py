@@ -52,7 +52,8 @@ ROUND_HEAD = {
     # r14 head (no new gates). The changed gates are the ones whose
     # iterative operator loops moved onto caching.fixpoint: the graph
     # family, connected_components (dedup), and the three trainers with
-    # their segments/fertility composers.
+    # their segments/fertility composers; r16 adds perceptron_langid,
+    # whose training moved onto the shared collect loop.
     "through_round": 13,
     "new_first": [],
     "changed": [
@@ -62,6 +63,7 @@ ROUND_HEAD = {
         "bpe_train", "bpe_segments", "bpe_fertility",
         "wordpiece_train", "wordpiece_segments", "wordpiece_fertility",
         "unigram_train", "unigram_segments", "unigram_fertility",
+        "perceptron_langid",
     ],
 }
 

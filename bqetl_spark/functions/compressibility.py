@@ -73,27 +73,6 @@ def compression_ratio(df: DataFrame, text_col: str = "text",
             .mapInPandas(run, schema=RATIO_SCHEMA))
 
 
-def compressibility_filter(df: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           min_ratio_ppm: int = 100_000,
-                           max_ratio_ppm: int = 1_100_000,
-                           level: int = 6) -> DataFrame:
-    """Keep documents whose DEFLATE ratio sits in the healthy band —
-    the composed filter a pipeline actually runs. Defaults follow the
-    published heuristic shape: below ~0.1 the text is template/repeat
-    spam, above ~1.1 it is incompressible junk (deflate overhead pushes
-    random bytes slightly past 1.0); tune per corpus — short documents
-    carry more deflate overhead, so bands for sub-KB docs sit higher.
-    Returns the kept rows of ``df`` (semi-join on the id — document
-    bytes never re-shuffle)."""
-    keep = (compression_ratio(df, text_col, id_col, level)
-            .filter(F.col("ratio_ppm").isNotNull()
-                    & (F.col("ratio_ppm") >= min_ratio_ppm)
-                    & (F.col("ratio_ppm") <= max_ratio_ppm))
-            .select(F.col("doc_id").alias("__keep_id")))
-    return df.join(keep, F.col(id_col) == F.col("__keep_id"), "leftsemi")
-
-
 def lz_window_savings(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id",
                       ks: tuple[int, ...] = (8, 16)) -> DataFrame:

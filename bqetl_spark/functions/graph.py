@@ -303,7 +303,6 @@ def node_label(node) -> "F.Column":
 
 def copurchase_edges(lineitem: DataFrame, min_parts: int = 2,
                      max_parts_per_order: int = 20,
-                     prefilter_counts: bool = False,
                      min_orders: int = 1) -> DataFrame:
     """Undirected part co-purchase edges: one edge per DISTINCT unordered
     partkey pair appearing on the same order, canonicalized a < b.
@@ -328,26 +327,15 @@ def copurchase_edges(lineitem: DataFrame, min_parts: int = 2,
     TPC-H orders carry <= 7 lineitems so the guard never fires on the
     test corpus. Boundary: the guard bounds EXPANSION; the collect_set
     buffer is linear in the per-order DISTINCT part count (better than
-    the raw order size). For adversarial inputs (a basket with millions
-    of distinct parts) pass ``prefilter_counts=True`` to cut mega-orders
-    with a cheap distinct-count aggregation BEFORE any set is collected
-    (+1 shuffle)."""
+    the raw order size)."""
     if not 2 <= min_parts <= max_parts_per_order:
         raise ValueError("need 2 <= min_parts <= max_parts_per_order")
     li = lineitem.select(F.col("l_orderkey").alias("ok"),
                          F.col("l_partkey").cast("long").alias("pk"))
-    if prefilter_counts:
-        cnt = (li.groupBy("ok").agg(F.countDistinct("pk").alias("__n"))
-               .filter((F.col("__n") >= min_parts) &
-                       (F.col("__n") <= max_parts_per_order))
-               .select("ok"))
-        arrs = (li.join(cnt, "ok").groupBy("ok")
-                .agg(F.sort_array(F.collect_set("pk")).alias("ps")))
-    else:
-        arrs = (li.groupBy("ok")
-                .agg(F.sort_array(F.collect_set("pk")).alias("ps"))
-                .filter((F.size("ps") >= min_parts) &
-                        (F.size("ps") <= max_parts_per_order)))
+    arrs = (li.groupBy("ok")
+            .agg(F.sort_array(F.collect_set("pk")).alias("ps"))
+            .filter((F.size("ps") >= min_parts) &
+                    (F.size("ps") <= max_parts_per_order)))
     pair = F.explode(F.expr(
         """flatten(transform(ps, (x, i) ->
                transform(slice(ps, i + 2, size(ps)),
@@ -490,9 +478,10 @@ def k_core(edges: DataFrame, k: int, a_col: str = "a", b_col: str = "b",
     # times (directly plus through both kill-set joins), so the
     # logical tree grows 3^rounds and the first cut OOMed the driver
     # just RENDERING it; checkpoint truncates the plan to a leaf each
-    # round. No up-front repartition: the checkpointed leaf keeps the
-    # edge build's partitioning and the measured per-round cost is 2x
-    # LOWER without the extra exchange (A/B in PLANS r8).
+    # round. No up-front repartition: the measured per-round cost is
+    # 2x LOWER without it (A/B in PLANS r8: 0.47-0.52 s against
+    # 0.97-1.2 s per round). A localCheckpoint leaf reports
+    # UnknownPartitioning(0), so the rounds' joins shuffle either way.
     e = (edges.select(F.col(a_col).alias("s"), F.col(b_col).alias("d"))
          .unionByName(edges.select(F.col(b_col).alias("s"),
                                    F.col(a_col).alias("d")))

@@ -107,28 +107,6 @@ def lang_id(df: DataFrame, text_col: str = "text",
     return df.withColumn(out_col, pred)
 
 
-def winnow_fingerprint(col: Column | str, k: int = 8, w: int = 4) -> Column:
-    """Winnowing document fingerprint (the MOSS scheme): hash every
-    character k-gram, slide a window of w hashes, keep each window's
-    minimum; the distinct minima are the fingerprint.
-
-    The k-gram hash is xxhash64 of the substring rather than a literal
-    Rabin-Karp rolling update — on a JVM columnar engine the O(k) substring
-    hash vectorizes better than a sequential rolling recurrence, and the
-    winnow selection (which is what gives the guarantee: any shared
-    substring of length ≥ k+w-1 produces a shared fingerprint) is
-    unchanged. Returns array<long>, usable for jaccard-style overlap.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    n_grams = F.greatest(F.length(c) - (k - 1), F.lit(1))
-    grams = F.transform(F.sequence(F.lit(1), n_grams),
-                        lambda i: F.xxhash64(c.substr(i, F.lit(k))))
-    n_windows = F.greatest(F.size(grams) - (w - 1), F.lit(1))
-    minima = F.transform(F.sequence(F.lit(1), n_windows),
-                         lambda j: F.array_min(F.slice(grams, j, w)))
-    return F.array_distinct(minima)
-
-
 def fingerprint(col: Column | str) -> Column:
     """Document fingerprint: md5 of normalized text (lowercase, strip
     non-alphanumeric, collapse whitespace). md5 exists in both Spark and
@@ -1086,13 +1064,13 @@ def perceptron_langid(df: DataFrame, text_col: str = "text",
     integer scores: NOTHING can wobble, not even a ulp (the one model
     family here with zero float anywhere, including training).
 
-    Scale shape: weights are O(classes × buckets) — broadcast;
-    per-iteration cost is one (doc, class) score aggregation over the
-    slice's bucket grid + one update aggregation — 2 shuffles per
-    iteration, no driver-side data. The class list is an O(languages)
-    broadcast crossJoin (BNLJ — allowlisted like lang_id_trained's
-    smoothing floors). Final pass scores EVERY document with the
-    trained weights. Returns (id, lang, pred_lang, score BIGINT).
+    Scale shape: training runs :func:`_batch_perceptron`'s collect
+    loop. The weights are O(classes × buckets) BIGINTs held on the
+    driver and planned as array literals; each iteration is one
+    per-doc score aggregation over the training slice plus one bounded
+    collect of the weight delta. There is no class-list crossJoin. The
+    final pass scores EVERY document with the trained weights. Returns
+    (id, lang, pred_lang, score BIGINT).
     """
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
@@ -1100,7 +1078,7 @@ def perceptron_langid(df: DataFrame, text_col: str = "text",
         raise ValueError(f"iters must be >= 1, got {iters}")
     if ref_mod < 1 or not (0 < ref_keep <= ref_mod):
         raise ValueError(f"bad training slice {ref_keep}/{ref_mod}")
-    from bqetl_spark.caching import ckpt, pin
+    from bqetl_spark.caching import pin
 
     base = (df.select(F.col(id_col), F.col(lang_col),
                       F.lower(F.col(text_col)).alias("__txt"))
@@ -1112,97 +1090,20 @@ def perceptron_langid(df: DataFrame, text_col: str = "text",
               .cast("long") % buckets)
     feats = (base.select(F.col(id_col), F.col(lang_col), gram)
              .select(F.col(id_col), F.col(lang_col), bucket.alias("__b")))
-    # r13 REVERT of the r12 collect-loop for THIS gate (VERDICT r12
-    # item 3 — the driver's 0.46× read was real, not ambient): the
-    # langid plan is moderate (5 classes, 256 buckets, trigram
-    # features), so the r11 in-plan weights-as-DataFrame loop wins at
-    # every scale — same-session A/B on this box: 3.6 s vs 7.7 s at
-    # sf0.1 and 9.8 s vs 55 s at sf1 (r11 tree vs r12 tree,
-    # BENCH_AB_TREES protocol). The collect-loop `_batch_perceptron`
-    # stays for the quality family, whose richer featurization made
-    # the in-plan variant explode to a 475-Exchange / 34-BNLJ plan
-    # (driver-confirmed 1.45× win there). Featurization is pin()ed,
-    # not checkpointed: a flat md5 groupBy's lineage is one subtree
-    # (no compounding planning cost), and a persisted plan is
-    # recognized by the CacheManager across repeated invocations in
-    # one session while a localCheckpoint is never reused.
     docfeat = pin(feats.groupBy(id_col, lang_col, "__b")
                   .agg(F.count("*").cast("long").alias("__n")))
-    final = _batch_perceptron_inplan(docfeat, id_col, lang_col, iters,
-                                     ref_mod, ref_keep)
+    final = _batch_perceptron(docfeat, id_col, lang_col, iters,
+                              ref_mod, ref_keep)
     return final.select(F.col(id_col), F.col(lang_col),
                         F.col("__pred").alias("pred_lang"),
                         F.col("__s").alias("score"))
 
 
-def _batch_perceptron_inplan(docfeat: DataFrame, id_col: str,
-                             label_col: str, iters: int, ref_mod: int,
-                             ref_keep: int) -> DataFrame:
-    """The r10/r11 in-plan batch-perceptron loop: weights live in a
-    small pinned DataFrame folded with a FULL join per iteration and
-    broadcast into the scoring join — no driver-side collects at all.
-    Math identical to :func:`_batch_perceptron` (order-free integer
-    batch updates, argmax with class-ASC tie-break); the two variants
-    are alternative physical shapes of the same function, chosen per
-    caller (see perceptron_langid for the A/B evidence)."""
-    from bqetl_spark.caching import pin
-
-    tr = pin(docfeat.filter(
-        F.pmod(F.col(id_col), F.lit(ref_mod)) < ref_keep))
-    cls = pin(tr.select(F.col(label_col).alias("__cls")).distinct())
-    trdocs = pin(tr.select(id_col, label_col).distinct())
-    weights = None  # empty model: every score coalesces to 0
-
-    def _scores(grid_docs, grid_feat, w):
-        sc = grid_docs.crossJoin(F.broadcast(cls))
-        joined = (sc.join(grid_feat.select(id_col, "__b", "__n"), id_col)
-                  .join(F.broadcast(w), ["__cls", "__b"], "left")
-                  if w is not None else
-                  sc.join(grid_feat.select(id_col, "__b", "__n"), id_col)
-                  .withColumn("__w", F.lit(None).cast("long")))
-        return (joined.groupBy(id_col, label_col, "__cls")
-                .agg(F.coalesce(F.sum(F.col("__n") * F.col("__w")),
-                                F.lit(0)).cast("long").alias("__s")))
-
-    def _argmax(sc):
-        w_ = Window.partitionBy(id_col).orderBy(F.desc("__s"),
-                                                F.asc("__cls"))
-        return (sc.withColumn("__rn", F.row_number().over(w_))
-                .filter(F.col("__rn") == 1)
-                .select(id_col, label_col, F.col("__cls").alias("__pred"),
-                        "__s"))
-
-    for _ in range(iters):
-        pred = _argmax(_scores(trdocs, tr, weights))
-        mis = pred.filter(F.col("__pred") != F.col(label_col)) \
-            .select(id_col, label_col, "__pred")
-        delta = (tr.join(mis, [id_col, label_col])
-                 .select(F.col(label_col).alias("__cls"), "__b",
-                         F.col("__n").alias("__d"))
-                 .unionByName(
-                     tr.join(mis, [id_col, label_col])
-                     .select(F.col("__pred").alias("__cls"), "__b",
-                             (-F.col("__n")).alias("__d")))
-                 .groupBy("__cls", "__b")
-                 .agg(F.sum("__d").cast("long").alias("__dw")))
-        if weights is None:
-            weights = pin(delta.withColumnRenamed("__dw", "__w"))
-        else:
-            weights = pin(
-                weights.join(delta, ["__cls", "__b"], "full")
-                .select("__cls", "__b",
-                        (F.coalesce("__w", F.lit(0))
-                         + F.coalesce("__dw", F.lit(0)))
-                        .cast("long").alias("__w")))
-    alldocs = docfeat.select(id_col, label_col).distinct()
-    return _argmax(_scores(alldocs, docfeat, weights))
-
-
 def _batch_perceptron(docfeat: DataFrame, id_col: str, label_col: str,
                       iters: int, ref_mod: int, ref_keep: int) -> DataFrame:
-    """Shared batch-perceptron training loop (extracted from
-    :func:`perceptron_langid` for the r11 trained quality classifier):
-    takes the pinned (id, label, __b bucket, __n count) feature table,
+    """The batch-perceptron training loop of :func:`perceptron_langid`
+    and :func:`quality_perceptron`: takes the materialized (id, label,
+    __b bucket, __n count) feature table,
     trains for ``iters`` order-free batch iterations on the
     ``id % ref_mod < ref_keep`` slice, scores EVERY document with the
     final weights. Returns (id, label, __pred, __s) — all-BIGINT, zero
@@ -1211,7 +1112,7 @@ def _batch_perceptron(docfeat: DataFrame, id_col: str, label_col: str,
     r12 optimization (guide §2.4/§3.1): the model is O(classes ×
     buckets) BIGINTs — the same metadata scale as the IVF centroids the
     engine already collects and broadcasts — so the weights now live in
-    a driver-side dict rendered into literal per-class lookup MAPs:
+    a driver-side dict rendered into literal per-class lookup arrays:
 
         score_c(d) = Σ_b n_d[b]·w_c[b]      one conditional aggregation
         pred(d)    = argmin_c (−score_c, c)  array_min over class structs
@@ -1227,8 +1128,11 @@ def _batch_perceptron(docfeat: DataFrame, id_col: str, label_col: str,
     ASC) tie-break ≡ array_min of (−score, class) structs; and
     sum(n·coalesce(w,0)) ≡ coalesce(sum(n·w),0) for missing buckets.
     Proven by the unchanged oracle hash at sf0.001/0.01/0.1 for all six
-    dependent gates (OPTIMIZATION_r12.md)."""
-    from bqetl_spark.caching import ckpt, pin
+    dependent gates (OPTIMIZATION_r12.md). Both callers train here:
+    with storage released after every call, this loop beats the
+    in-plan weights-as-DataFrame loop for perceptron_langid as well,
+    cold and warm (PLANS.md r14, r16)."""
+    from bqetl_spark.caching import ckpt
 
     tr = ckpt(docfeat.filter(
         F.pmod(F.col(id_col), F.lit(ref_mod)) < ref_keep))

@@ -46,7 +46,7 @@ def _run_stream_to_table(stream_df, mode: str) -> DataFrame:
     # adapt later), so choose it deliberately — parallelism-sized, not
     # default-sized — and restore the session conf afterwards.
     key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
+    prev = spark.conf.get(key, None)
     spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
     _STREAM_SEQ[0] += 1
     name = f"__stream_gate_{_STREAM_SEQ[0]}"
@@ -59,7 +59,10 @@ def _run_stream_to_table(stream_df, mode: str) -> DataFrame:
          .start().awaitTermination())
         return ckpt(spark.table(name))
     finally:
-        spark.conf.set(key, prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
         spark.catalog.dropTempView(name)
         shutil.rmtree(state, ignore_errors=True)
 

@@ -957,7 +957,10 @@ def q_perceptron_langid(spark, sf_dir):
     NB lang_id_trained still carries a margin-audited ln). The oracle
     unrolls all three iterations as MATERIALIZED CTEs — scores,
     argmax, signed updates, FULL-JOIN weight fold — and hash-matches
-    the final per-doc predictions + winning scores."""
+    the final per-doc predictions + winning scores. The Spark side
+    trains with the shared ``_batch_perceptron`` collect loop instead
+    (driver-held weights planned as array literals): a different plan
+    for the same integer weights."""
     docs = _t(spark, sf_dir, "documents")
     return tx.perceptron_langid(docs, buckets=256, iters=3)
 

@@ -119,36 +119,3 @@ def apply_lookups(spark: SparkSession, bucket: str, fact: DataFrame,
             schema=string_schema([desc.key_key, desc.value_key]))
         out = lookup(out, dim, fact_table, desc)
     return out
-
-
-def bloom_filtered_join(fact: DataFrame, dim: DataFrame,
-                        fact_key: str, dim_key: str,
-                        m_bits: int = 1 << 20, k_hashes: int = 3,
-                        how: str = "inner") -> DataFrame:
-    """Runtime-filter join composition (r7): build a bloom bitmap from
-    the dim side's keys, prune the fact side MAP-ONLY against it, then
-    join — the production wiring of functions.sketch.bloom_build /
-    bloom_might_contain. Because the bloom has zero false negatives, the
-    result is EXACTLY the plain join (pinned in tests); what changes is
-    the plan: at 100 TB the fact table reaches the join shuffle already
-    cut to ~selectivity (+fpr), instead of shuffling every row.
-
-    Use when the dim side is small enough to sketch (the bitmap is
-    m_bits BITS regardless of dim row count; the build-side collect is
-    m_bits-bounded metadata) but its key set is too large or the
-    pipeline too multi-stage for the optimizer's own runtime filter
-    (spark.sql.optimizer.runtime.bloomFilter) to be relied on. ``how``
-    supports the join types where pre-pruning the fact side is
-    semantics-preserving: inner and left_semi.
-    """
-    from bqetl_spark.functions.sketch import bloom_build, bloom_might_contain
-
-    if how not in ("inner", "left_semi"):
-        raise ValueError(
-            f"bloom pre-pruning drops fact rows, which only preserves "
-            f"inner/left_semi semantics; got how={how!r}")
-    words = bloom_build(dim, dim_key, m_bits=m_bits, k_hashes=k_hashes)
-    pruned = fact.filter(
-        bloom_might_contain(fact_key, words, m_bits=m_bits,
-                            k_hashes=k_hashes))
-    return pruned.join(dim, on=pruned[fact_key] == dim[dim_key], how=how)

@@ -93,23 +93,20 @@ def _listing(spark: SparkSession, path: str) -> tuple | None:
     return tuple(sorted(files)) or None
 
 
-def parquet_schema(spark: SparkSession, path: str,
-                   merge: bool = False) -> StructType:
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """The schema ``spark.read.parquet(path)`` infers under ``INFER_CONF``,
-    memoized per (path, merge, file listing). An overwritten path has a
+    memoized per (path, file listing). An overwritten path has a
     new listing and so re-infers; the memo holds only ``StructType``s and
     keeps the ``SCHEMA_MEMO_MAX`` most recently used."""
     listing = _listing(spark, path)
-    key = None if listing is None else (path, merge, listing)
+    key = None if listing is None else (path, listing)
     with _memo_lock:
         if key in _memo:
             _memo.move_to_end(key)
             return _memo[key]
         # under the lock: the confs are session-wide
         with _inference_conf(spark):
-            reader = spark.read.option("mergeSchema", "true") if merge \
-                else spark.read
-            schema = reader.parquet(path).schema
+            schema = spark.read.parquet(path).schema
         if key is not None:
             _memo[key] = schema
             if len(_memo) > SCHEMA_MEMO_MAX:
@@ -152,20 +149,3 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``events_ts_micros``)."""
     return events_ts_micros(
         read_parquet(spark, f"{sf_dir.rstrip('/')}/events.parquet"))
-
-
-def load_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Read a directory written by multiple pipeline versions — the
-    schema-evolution path (columns added over time). ``mergeSchema``
-    unions all footer schemas (one footer read per file); rows from files
-    that predate a column surface SQL NULL for it, which is exactly the
-    reference's missing-JSON-field behavior (JSONReader.java:86-94)
-    carried to the lake. The merged schema is then declared, so the scan
-    itself reads no footers for schema.
-
-    Cost note for 100 TB: schema merging reads every footer once per file
-    listing — on tables with millions of files, prefer a declared schema
-    (``spark.read.schema(...)``); mergeSchema is for the version-skew
-    window during a rolling pipeline upgrade."""
-    schema = parquet_schema(spark, path, merge=True)
-    return ensure_ltz(spark.read.schema(schema).parquet(path))

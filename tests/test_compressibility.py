@@ -7,8 +7,7 @@ import zlib
 
 import pytest
 
-from bqetl_spark.functions.compressibility import (compressibility_filter,
-                                                   compression_ratio)
+from bqetl_spark.functions.compressibility import compression_ratio
 
 
 def _rows(spark, texts):
@@ -48,15 +47,6 @@ def test_partition_invariance(spark):
     b = sorted(map(tuple, compression_ratio(
         _rows(spark, texts).repartition(13)).collect()))
     assert a == b
-
-
-def test_filter_band_keeps_healthy_docs(spark):
-    rep = "spam " * 500
-    normal = " ".join(f"tok{i} value{i*7%13}" for i in range(200))
-    df = _rows(spark, [rep, normal])
-    kept = [r["doc_id"] for r in
-            compressibility_filter(df).select("doc_id").collect()]
-    assert kept == [1]                # repetitive doc dropped
 
 
 def test_level_validation(spark):

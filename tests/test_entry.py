@@ -131,3 +131,21 @@ def test_gate_builders_leave_no_scratch_behind(spark, tmp_path, monkeypatch):
     assert views == []
     assert os.listdir(tmp_path) == ["bqetl_scratch"]
     assert len(os.listdir(tmp_path / "bqetl_scratch")) == 1
+
+
+def test_stream_gates_leave_unset_shuffle_partitions_unset(spark):
+    """The memory-sink replay pins spark.sql.shuffle.partitions only while
+    the stream runs; on a session that never set the key, it stays unset
+    (not an explicit 200) after a streaming gate."""
+    from bqetl_spark.caching import release_pinned
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        assert QUERIES["stream_events_hourly"](spark, SF_DIR).count() > 0
+        assert key not in spark.conf.getAll
+    finally:
+        release_pinned()
+        if saved is not None:
+            spark.conf.set(key, saved)

@@ -175,9 +175,9 @@ def test_triangles_supernode_guard(spark):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_copurchase_edges_guard_and_prefilter_equivalence(spark):
+def test_copurchase_edges_guard(spark):
     """Pairs are canonical a<b and distinct; an order above the guard
-    contributes nothing; prefilter_counts=True is plan-only (same rows)."""
+    contributes nothing."""
     from bqetl_spark.functions.graph import copurchase_edges
 
     rows = [(1, 10), (1, 20), (1, 20), (2, 30)]          # dup pk, single
@@ -186,8 +186,6 @@ def test_copurchase_edges_guard_and_prefilter_equivalence(spark):
     e = copurchase_edges(li, max_parts_per_order=5)
     got = {(r["a"], r["b"]) for r in e.collect()}
     assert got == {(10, 20)}
-    pre = copurchase_edges(li, max_parts_per_order=5, prefilter_counts=True)
-    assert {(r["a"], r["b"]) for r in pre.collect()} == got
 
 
 def test_triangle_validation(spark):

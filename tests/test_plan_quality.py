@@ -40,11 +40,6 @@ Justified allowlist (each audited round 4; hard_negatives round 6):
 - cms_join_size (r10): the gate crossJoins two ONE-ROW aggregates (the
   sketch estimate and the exact join count) for side-by-side output —
   the important_parts scalar-attach shape on both sides.
-- perceptron_langid (r10): text.perceptron_langid builds the
-  (doc × class) score grid by broadcast-crossJoining the class list —
-  one row per LANGUAGE in the training labels (the lang_id_trained
-  class: O(10²) at any corpus scale, grows with the label alphabet,
-  not the data); every weight/feature join is an equi-join.
 - hybrid_rrf / retrieval_eval (r11): both embed cosine_topk's audited
   brute-force dense ranking with a ONE-row query set (the embed_topk
   class — broadcast side is the single query vector; the ANN paths are
@@ -52,15 +47,6 @@ Justified allowlist (each audited round 4; hard_negatives round 6):
   attaches the ONE-row ideal-DCG aggregate via broadcast crossJoin
   (the important_parts scalar-attach shape). The fusion/eval joins
   themselves are k-row equi-joins.
-- quality_trained / quality_confusion / corpus_keep_trained (r11):
-  the same _batch_perceptron loop with a TWO-row class list
-  ('keep'/'toss') — the perceptron_langid crossJoin exactly, fixed at
-  2 loop-side rows at any corpus scale; the confusion matrix and the
-  curation chain compose that plan verbatim, no new loop shape.
-- corpus_curate_multimodal (r12): composes corpus_keep_trained verbatim
-  as its quality stage, inheriting that gate's already-audited 2-row
-  class-list perceptron crossJoin; the three dedup stages add only
-  banded equi-joins — no new loop shape.
 - hits_scores (r12): hits_fixed's per-phase max normalizer now attaches
   via the important_parts one-row-aggregate broadcast crossJoin
   (2·iters of them) instead of 2·iters driver collects — the loop side
@@ -77,11 +63,8 @@ ALLOWED_BNLJ = {"embed_topk", "embed_sq_topk", "embed_neardup",
                 "important_parts", "idle_customers", "hard_negatives",
                 "unigram_train", "unigram_segments", "unigram_fertility",
                 "lang_id_trained", "lpa_modularity", "vocab_growth",
-                "perceptron_langid", "cms_join_size",
-                "langid_confusion", "quality_trained",
-                "quality_confusion", "corpus_keep_trained",
-                "hybrid_rrf", "retrieval_eval", "hits_scores",
-                "corpus_curate_multimodal"}
+                "cms_join_size", "langid_confusion",
+                "hybrid_rrf", "retrieval_eval", "hits_scores"}
 
 # streaming queries execute a bounded replay inside the builder, and the
 # roundtrips write temp files — plan text is checked for batch shapes only

@@ -366,33 +366,6 @@ def test_bloom_null_keys_test_false(spark):
     assert got[None] is False
 
 
-def test_bloom_filtered_join_equals_plain_join(spark):
-    """The composition operator must return EXACTLY the plain join (no
-    false negatives => pruning loses nothing; false positives are then
-    rejected by the join itself)."""
-    from bqetl_spark.operators.joins import bloom_filtered_join
-
-    fact = spark.createDataFrame(
-        [(i, f"f{i}") for i in range(2000)], ["fk", "payload"])
-    dim = spark.createDataFrame(
-        [(i * 7, f"d{i}") for i in range(120)], ["dk", "name"])
-    got = sorted(map(tuple, bloom_filtered_join(
-        fact, dim, "fk", "dk", m_bits=4096).collect()))
-    want = sorted(map(tuple,
-                      fact.join(dim, fact.fk == dim.dk, "inner").collect()))
-    assert got == want and len(got) > 0
-
-
-def test_bloom_filtered_join_validation(spark):
-    from bqetl_spark.operators.joins import bloom_filtered_join
-
-    fact = spark.createDataFrame([(1, "a")], ["fk", "p"])
-    dim = spark.createDataFrame([(1, "b")], ["dk", "n"])
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        bloom_filtered_join(fact, dim, "fk", "dk", how="left")
-
-
 # --------------------------------------------- sliding-window HLL (r7) --
 
 def test_sliding_equals_direct_window_sketch(spark):

@@ -97,23 +97,6 @@ def test_csv_loader_namespaced_and_keyed(spark, tmp_path):
     assert rows["gamma"]["t_id"] is None  # bad key → NULL, not an error
 
 
-def test_load_evolved_merges_added_columns(spark, tmp_path):
-    """Rolling-upgrade schema evolution: v2 adds a column; a merged read
-    surfaces it with NULL for v1 rows (the reference's absent-JSON-field
-    semantics, JSONReader.java:86-94, carried to parquet)."""
-    from bqetl_spark.sources.parquet_source import load_evolved
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id bigint, x string") \
-        .write.parquet(path)
-    spark.createDataFrame([(2, "b", 9.5)],
-                          "id bigint, x string, score double") \
-        .write.mode("append").parquet(path)
-    got = {r["id"]: (r["x"], r["score"])
-           for r in load_evolved(spark, path).collect()}
-    assert got == {1: ("a", None), 2: ("b", 9.5)}
-
-
 # --- custom Python DataSource (r6, Spark 4 DataSource API) -------------
 
 

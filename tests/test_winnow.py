@@ -1,13 +1,11 @@
-from pyspark.sql import functions as F
-
-from bqetl_spark.functions.text import winnow_fingerprint
+from bqetl_spark.functions.dedup import winnow_fingerprint_vec
 
 
 def _fp(spark, texts, k=8, w=4):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
                                ["doc_id", "text"])
     rows = df.select("doc_id",
-                     winnow_fingerprint("text", k, w).alias("fp")).collect()
+                     winnow_fingerprint_vec(k, w)("text").alias("fp")).collect()
     return {r["doc_id"]: set(r["fp"]) for r in rows}
 
 
